@@ -194,10 +194,10 @@ object SparkEntry {
   /** Star join: fact ⋈ orders (shuffle/AQE) ⋈ broadcast dims, then grouped
     * revenue with an exact (order-independent) DECIMAL sum. */
   private def q11(s: SparkSession, dir: String): DataFrame = {
-    // fact scan parallelized (Sources.tableParallel): the single-row-group
+    // fact scan parallelized (the Sources.table guard): the single-row-group
     // fixture otherwise runs scan -> 4 BHJ probes -> decimal partial agg
     // on ONE task (measured 8.4 s of a 9.9 s sf1 run in one job)
-    val li = Sources.tableParallel(s, dir, "lineitem")
+    val li = Sources.table(s, dir, "lineitem")
     val o = Sources.table(s, dir, "orders")
     val joined = Joins.starBroadcast(
       li.join(o, col("l_orderkey") === col("o_orderkey")),
@@ -606,7 +606,7 @@ object SparkEntry {
   private def q35(s: SparkSession, dir: String): DataFrame =
     // parallelized scan: exact percentile's partial aggregation BUFFERS
     // every value on the (single-split) scan task otherwise
-    Sources.tableParallel(s, dir, "events")
+    Sources.table(s, dir, "events")
       .groupBy(col("event_type"))
       .agg(expr("percentile(value, 0.5)").as("median_raw"),
         expr("percentile(value, 0.9)").as("p90_raw"),
@@ -708,7 +708,7 @@ object SparkEntry {
   /** Star-fact integrity audit (counts / distincts / missing) — the
     * check_counts analog over lineitem. */
   private def q38(s: SparkSession, dir: String): DataFrame =
-    Aggregates.integrity(Sources.tableParallel(s, dir, "lineitem"),
+    Aggregates.integrity(Sources.table(s, dir, "lineitem"),
       distinctCols = Seq("l_suppkey", "l_partkey", "l_returnflag"),
       missingCols = Seq("l_quantity", "l_extendedprice"))
 
@@ -718,7 +718,7 @@ object SparkEntry {
     * sides — Spark's asc default vs DuckDB's NULLS LAST default would
     * otherwise reorder subtotal rows. */
   private def q39(s: SparkSession, dir: String): DataFrame =
-    Aggregates.rollupReagg(Sources.tableParallel(s, dir, "lineitem"),
+    Aggregates.rollupReagg(Sources.table(s, dir, "lineitem"),
         keys = Seq(col("l_returnflag"), col("l_linestatus")),
         aggs = Seq(count(lit(1)).as("n_items"),
           Aggregates.exactSum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev")),
@@ -955,7 +955,7 @@ object SparkEntry {
     * fact scan. */
   private def q83(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val g = Sources.tableParallel(s, dir, "lineitem")
+    val g = Sources.table(s, dir, "lineitem")
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(Aggregates.exactSum(
         col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
@@ -1024,7 +1024,7 @@ object SparkEntry {
     * is where AQE's split-by-size gives up and salting is the fix. */
   private def q87(s: SparkSession, dir: String): DataFrame = {
     // parallelized fact scan: the salted-join probe chain is scan-fused
-    val li = Sources.tableParallel(s, dir, "lineitem")
+    val li = Sources.table(s, dir, "lineitem")
       .select(col("l_partkey"), col("l_orderkey"),
         (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
     val dim = Sources.table(s, dir, "part")
@@ -1185,7 +1185,7 @@ object SparkEntry {
     * window runs over the |flags|×|weeks| post-agg table, not the scan. */
   private def q95(s: SparkSession, dir: String): DataFrame = {
     val wk = expr("datediff(l_shipdate, DATE '1970-01-01') div 7").cast("long")
-    val g = Sources.tableParallel(s, dir, "lineitem")
+    val g = Sources.table(s, dir, "lineitem")
       .groupBy(col("l_returnflag"), wk.as("wk"))
       .agg(Aggregates.exactSum(
         col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
@@ -1823,7 +1823,7 @@ object SparkEntry {
     * exact integer power sums — the distribution-shape audit a mixture
     * rebalance reads before deciding what to up/downsample. */
   private def q133(s: SparkSession, dir: String): DataFrame =
-    Aggregates.higherMoments(Sources.tableParallel(s, dir, "lineitem"),
+    Aggregates.higherMoments(Sources.table(s, dir, "lineitem"),
         Seq("l_returnflag"), col("l_quantity"))
       .orderBy(col("l_returnflag").asc)
 
@@ -2392,7 +2392,7 @@ object SparkEntry {
     * sized Σ share² goes through the 6-dp DECIMAL exact-sum pattern. */
   private def q152(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val bySupp = Sources.tableParallel(s, dir, "lineitem")
+    val bySupp = Sources.table(s, dir, "lineitem")
       .groupBy(col("l_returnflag"), col("l_suppkey"))
       .agg(Aggregates.exactSum(
         col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
@@ -2858,13 +2858,10 @@ object SparkEntry {
   private val SplitTrainBp = 8000
   private val SplitValBp = 9000
 
-  /** DSIR hashed-feature model shape (shared with the oracle AND with
-    * tools.StreamStoreBench's q190 runner — `private[graft]` so the
-    * bench measures THE gate's configuration, not a hardcoded copy that
-    * silently drifts when these are retuned). */
-  private[graft] val DsirBuckets = 256
-  private[graft] val DsirSalt = "dsir-v1"
-  private[graft] val DsirTargetSource = "src3"
+  /** DSIR hashed-feature model shape (shared with the oracle). */
+  private val DsirBuckets = 256
+  private val DsirSalt = "dsir-v1"
+  private val DsirTargetSource = "src3"
 
   /** Token-budget allocation knobs (shared with the oracle): budget =
     * Σtokens DIV den, repeat ceiling in epochs. */
@@ -3809,7 +3806,7 @@ object SparkEntry {
     // output is quadratic in SF) to |days × promo window density|
     // (~20k). The 100 TB shape: the fact table never crosses the join.
     // parallelized scan: the per-day exact-decimal pre-agg is scan-fused
-    val li = Sources.tableParallel(s, dir, "lineitem")
+    val li = Sources.table(s, dir, "lineitem")
       .select(col("l_quantity"),
         expr("datediff(l_shipdate, DATE '1970-01-01')").cast("long").as("ship_day"))
       .groupBy(col("ship_day"))
@@ -4087,7 +4084,7 @@ object SparkEntry {
     * can express (no detail level, no grand total). Runs via the same
     * hierarchical re-agg as q39/q52. */
   private def q62(s: SparkSession, dir: String): DataFrame =
-    Aggregates.groupingSetsReagg(Sources.tableParallel(s, dir, "lineitem"),
+    Aggregates.groupingSetsReagg(Sources.table(s, dir, "lineitem"),
         keys = Seq(col("l_returnflag"), col("l_linestatus")),
         sets = Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus"))),
         aggs = Seq(count(lit(1)).as("n_items"),
@@ -4184,7 +4181,7 @@ object SparkEntry {
   /** CUBE grouping sets — all 4 subtotal combinations, via hierarchical
     * re-aggregation (NULLS FIRST pinned like q39's ROLLUP). */
   private def q52(s: SparkSession, dir: String): DataFrame =
-    Aggregates.cubeReagg(Sources.tableParallel(s, dir, "lineitem"),
+    Aggregates.cubeReagg(Sources.table(s, dir, "lineitem"),
         keys = Seq(col("l_returnflag"), col("l_linestatus")),
         aggs = Seq(count(lit(1)).as("n_items"),
           Aggregates.exactSum(col("l_quantity")).as("sq")),

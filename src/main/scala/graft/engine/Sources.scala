@@ -193,31 +193,63 @@ object Sources {
     * bytes: each file is a task + a footer read + an open). Rewrites a
     * parquet directory into ⌈rows / rowsPerFile⌉ similar-sized files
     * via a round-robin repartition (no shuffle key — pure rebalance),
-    * staging into `path + ".compact"` first and swapping only after the
-    * write succeeds, so a failed compaction leaves the table intact.
-    * At cluster scale run per partition directory, gated on file-count
-    * thresholds. */
+    * through the crash-safe [[replaceTable]] swap, so a failed
+    * compaction leaves the table intact. At cluster scale run per
+    * partition directory, gated on file-count thresholds. */
   def compact(spark: SparkSession, path: String, rowsPerFile: Long): Unit = {
     require(rowsPerFile > 0, "rowsPerFile must be positive")
-    val df = spark.read.parquet(path)
-    val n = df.count()
-    val files = math.max(1L, (n + rowsPerFile - 1) / rowsPerFile).toInt
-    val staging = path.stripSuffix("/") + ".compact"
-    df.repartition(files).write.mode("overwrite").parquet(staging)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(staging), spark.sparkContext.hadoopConfiguration)
-    val target = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + ".old")
-    // move-aside, not delete-then-rename: at every instant the rows
-    // exist under a well-known name, and each step is checked. A crash
-    // between the two renames leaves `.old` (and possibly `.compact`)
-    // to recover from — never a silently vanished table.
-    if (fs.exists(old)) require(fs.delete(old, true),
-      s"cannot clear stale $old")
-    require(fs.rename(target, old), s"cannot move $path aside to $old")
-    require(fs.rename(new org.apache.hadoop.fs.Path(staging), target),
-      s"compaction swap failed for $path — original preserved at $old")
-    require(fs.delete(old, true), s"compaction done but cannot remove $old")
+    replaceTable(spark, path) { current =>
+      val df = current.getOrElse(
+        throw new IllegalArgumentException(s"no table to compact at $path"))
+      val n = df.count()
+      df.repartition(math.max(1L, (n + rowsPerFile - 1) / rowsPerFile).toInt)
+    }
+  }
+
+  /** Crash-safe rewrite of the parquet table at `path` — the one swap
+    * behind [[compact]] and the streaming upsert sinks. `next` maps the
+    * current table (None when there is none yet) to its new contents,
+    * written ONCE to `<path>.staging` (overwrite must not
+    * read-while-write); the target is then moved aside to `<path>.old`,
+    * the staging moved into place and `.old` removed. Move-aside, not
+    * delete-then-rename, and every step checked: at every instant the
+    * rows exist under a well-known name. A crash between the two renames
+    * leaves the previous table at `.old` and no `<path>`; the next call
+    * restores it before reading, so a rewrite is never applied to a
+    * missing table (an upsert would otherwise keep only its own batch). */
+  private[graft] def replaceTable(spark: SparkSession, path: String)(
+      next: Option[DataFrame] => DataFrame): Unit = {
+    val target = new org.apache.hadoop.fs.Path(path.stripSuffix("/"))
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = target.suffix(".old")
+    val staging = target.suffix(".staging")
+    val current =
+      if (recoverTable(spark, path)) Some(spark.read.parquet(target.toString))
+      else None
+    next(current).write.mode("overwrite").parquet(staging.toString)
+    if (current.isDefined) {
+      if (fs.exists(old)) require(fs.delete(old, true),
+        s"cannot clear stale $old")
+      require(fs.rename(target, old), s"cannot move $target aside to $old")
+      require(fs.rename(staging, target),
+        s"swap failed for $target — original preserved at $old")
+      require(fs.delete(old, true), s"swap done but cannot remove $old")
+    } else require(fs.rename(staging, target),
+      s"cannot move $staging into place at $target")
+  }
+
+  /** Put back a table that a crash between [[replaceTable]]'s two
+    * renames left at `<path>.old`; true when a table exists at `path`
+    * afterwards. Existence goes through the path's own filesystem —
+    * java.io.File would silently report false for hdfs://, s3a:// etc.
+    * and every rewrite would clobber the table. */
+  private[graft] def recoverTable(spark: SparkSession, path: String): Boolean = {
+    val target = new org.apache.hadoop.fs.Path(path.stripSuffix("/"))
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = target.suffix(".old")
+    if (!fs.exists(target) && fs.exists(old))
+      require(fs.rename(old, target), s"cannot restore $target from $old")
+    fs.exists(target)
   }
 
   /** NOTE on the TIMESTAMP(NANOS) fixture era (rounds 1-3): the repo
@@ -230,9 +262,6 @@ object Sources {
     * deserves. TIMESTAMP(MICROS) INT64 reads as a pinned LONG with no
     * conf at all. */
 
-  /** Scan one fixture table with its pinned schema. For `events`, reads
-    * the micros timestamp as its raw LONG and derives `ts_utc: timestamp`.
-    */
   /** ONE definition of the micros-long → timestamp derivation, shared by
     * the pinned and inferred read paths — drift between the two would
     * silently break their drop-in interchangeability. The pinned path
@@ -251,21 +280,6 @@ object Sources {
         val utc = col("ts").cast(org.apache.spark.sql.types.TimestampType)
         df.withColumn("ts_utc", utc).withColumn("ts", unix_micros(utc))
     }
-
-  /** Scan one fixture table with its pinned schema — the engine-wide
-    * DEFAULT scan, which includes the guarded parallelizing repartition
-    * of [[tableParallel]] (a provable no-op on well-laid-out input; see
-    * its scaladoc for the guard). Round 13 made the repartition opt-in
-    * per query and hand-picked 12 call sites; that left every other
-    * fact scan — including any future query — silently single-task
-    * whenever the layout is under-split. The default is now inverted:
-    * every [[table]] caller gets the guard, and the measured-loss
-    * shapes (windows over a cheap scan, global top-k / pagination,
-    * count-only rollups, limb long sums — probe numbers in
-    * OPTIMIZATION_r13.md §11 and OPTIMIZATION_r14.md) opt OUT via
-    * [[tablePlain]]. */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    tableParallel(spark, sfDir, name)
 
   /** The ungated scan: pinned schema, no parallelizing repartition.
     * Opt-out for shapes where the repartition hop is a measured loss —
@@ -315,15 +329,17 @@ object Sources {
     }
   }
 
-  /** [[table]] with a guarded parallelizing repartition for UNDER-SPLIT
-    * scans — the guide-§2.5 "one huge unsplittable file" fix. Spark can
-    * split a parquet FILE by byte ranges, but a ROW GROUP is consumed
-    * whole by the split holding its start, so a single-row-group file
-    * (the fixture layout at every SF, and any production table landed
-    * by a writer with oversized row groups) caps the scan stage — and
-    * with it everything fused into the scan's WholeStageCodegen span
-    * (join probes, exact-decimal partial aggregation) — at ONE task no
-    * matter how many cores the session has.
+  /** Scan one fixture table with its pinned schema — the engine-wide
+    * DEFAULT scan, with a guarded parallelizing repartition for
+    * UNDER-SPLIT scans (the guide-§2.5 "one huge unsplittable file"
+    * fix). Spark can split a parquet FILE by byte ranges, but a ROW
+    * GROUP is consumed whole by the split holding its start, so a
+    * single-row-group file (the fixture layout at every SF, and any
+    * production table landed by a writer with oversized row groups)
+    * caps the scan stage — and with it everything fused into the
+    * scan's WholeStageCodegen span (join probes, exact-decimal partial
+    * aggregation) — at ONE task no matter how many cores the session
+    * has.
     *
     * The fix moves the bytes exactly once: a deterministic hash
     * repartition on the table's id column (xxhash64 — guide §2.5's
@@ -338,28 +354,30 @@ object Sources {
     *
     * Guarded: a no-op unless the file's effective split count
     * (min(rowGroups, ceil(bytes / maxPartitionBytes))) leaves at least
-    * half the session's cores idle AND the per-split bytes exceed
-    * `graft.scan.parallelizeMinBytes` (default 12 MB) — the measured
-    * boundary: at 10.8 MB/split (the sf0.1 lineitem) the hop washes
-    * against what it frees, at 15.2 MB/split (the sf1 events) and
-    * above it wins 25–67%. Since round 14 this IS [[table]] (the
-    * guarded default for every scan); shapes whose first exchange
-    * immediately follows a cheap scan (windows, global top-k /
-    * pagination, count-only rollups, limb long sums) opt OUT via
-    * [[tablePlain]] — the measured-loss list lives in
-    * OPTIMIZATION_r14.md. */
-  def tableParallel(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    * half the session's cores idle AND the per-split bytes reach
+    * [[ParallelizeMinBytes]] — so on well-laid-out input the plan is
+    * the plain scan. Every caller gets the guard; the measured-loss
+    * shapes (windows over a cheap scan, global top-k / pagination,
+    * count-only rollups, limb long sums — probe numbers in
+    * OPTIMIZATION_r13.md §11 and OPTIMIZATION_r14.md) opt OUT via
+    * [[tablePlain]]. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    table(spark, sfDir, name, ParallelizeMinBytes)
+
+  /** The guard's per-split byte floor — the measured boundary: at
+    * 10.8 MB/split (the sf0.1 lineitem) the hop washes against what it
+    * frees, at 15.2 MB/split (the sf1 events) and above it wins 25–67%. */
+  private val ParallelizeMinBytes: Long = 12L << 20
+
+  /** [[table]] at an explicit per-split byte floor, so specs can pin
+    * the guard's boundary on the small fixtures. */
+  private[graft] def table(spark: SparkSession, sfDir: String, name: String,
+                           minBytes: Long): DataFrame = {
     val df = tablePlain(spark, sfDir, name)
     val maxPB = spark.sessionState.conf.filesMaxPartitionBytes
     val (bytes, effSplits) =
       parquetLayout(spark, s"$sfDir/$name.parquet", math.max(1L, maxPB))
     val cores = spark.sparkContext.defaultParallelism
-    val minKey = "graft.scan.parallelizeMinBytes"
-    val minBytes = spark.conf.getOption(minKey).map { v =>
-      try v.trim.toLong
-      catch { case e: NumberFormatException => throw new IllegalArgumentException(
-        s"$minKey must be a byte count, got '$v'", e) }
-    }.getOrElse(12L << 20)
     if (effSplits * 2 <= cores && bytes / effSplits >= minBytes) {
       val key = schemas(name).fields.head.name
       df.repartition(spark.sessionState.conf.numShufflePartitions,

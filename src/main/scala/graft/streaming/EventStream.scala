@@ -107,42 +107,18 @@ object EventStream {
 
   /** The per-micro-batch MERGE body shared by the foreachBatch sinks:
     * dedup the incoming batch to the newest row per key, union with
-    * the existing target (if any), re-dedup, swap atomically. */
+    * the existing target (if any), re-dedup, and swap it in through
+    * the crash-safe [[graft.engine.Sources.replaceTable]]. */
   private def mergeBatchIntoTable(batch: DataFrame, keys: Seq[String],
                                   versionCol: String,
                                   targetPath: String): Unit = {
-    val spark = batch.sparkSession
     val incoming = graft.engine.Dedup.latestByKey(
       batch, keys, Seq(col(versionCol)))
-    // existence check through the Hadoop filesystem of the path —
-    // java.io.File would silently report false for hdfs://, s3a://
-    // etc. and every batch would clobber the table
-    val target = new org.apache.hadoop.fs.Path(targetPath)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (fs.exists(target)) {
-        val existing = spark.read.parquet(targetPath)
-        graft.engine.Dedup.latestByKey(
-          existing.unionByName(incoming), keys, Seq(col(versionCol)))
-      } else incoming
-    // overwrite must not read-while-write: ONE write to staging,
-    // then a checked move-aside swap (same pattern as
-    // Sources.compact) — a second overwrite of the target would
-    // both double the write I/O and open a crash window where the
-    // target directory has been deleted but not yet rewritten
-    val tmpPath = new org.apache.hadoop.fs.Path(targetPath + ".staging")
-    merged.write.mode("overwrite").parquet(tmpPath.toString)
-    if (fs.exists(target)) {
-      val old = new org.apache.hadoop.fs.Path(targetPath + ".old")
-      if (fs.exists(old)) require(fs.delete(old, true),
-        s"cannot clear stale $old")
-      require(fs.rename(target, old), s"cannot move $target aside")
-      require(fs.rename(tmpPath, target),
-        s"upsert swap failed — original preserved at $old")
-      require(fs.delete(old, true), s"swap done but cannot remove $old")
-    } else require(fs.rename(tmpPath, target),
-      s"cannot move staging into place at $target")
-    ()
+    Sources.replaceTable(batch.sparkSession, targetPath) {
+      case Some(existing) => graft.engine.Dedup.latestByKey(
+        existing.unionByName(incoming), keys, Seq(col(versionCol)))
+      case None => incoming
+    }
   }
 
   /** Streaming exact dedup with bounded state: drops re-deliveries of
@@ -199,22 +175,10 @@ object EventStream {
         .trigger(Trigger.AvailableNow())
         .start()
     } finally spark.conf.set(partConf, prev)
-    try {
-      q.processAllAvailable()
-      lastRunPeakStateRows = q.recentProgress
-        .map(p => p.stateOperators.map(_.numRowsTotal).sum)
-        .foldLeft(0L)(math.max)
-    } finally q.stop()
+    try q.processAllAvailable() finally q.stop()
     try summarize(spark.table(name)).localCheckpoint(true)
     finally spark.catalog.dropTempView(name)
   }
-
-  /** Peak state-store rows observed by the MOST RECENT [[runToMemory]]
-    * run (max over micro-batch progress of Σ numRowsTotal across state
-    * operators) — harness observability for the state-store scale
-    * measurements (tools.StreamStoreBench → SCALE.md); consumed by no
-    * query. */
-  @volatile var lastRunPeakStateRows: Long = 0L
 
   /** Stream the document corpus through the STATELESS deterministic
     * mixture sampler ([[graft.operators.Sampling.deterministicMix]])
@@ -351,9 +315,9 @@ object EventStream {
                       isTarget: org.apache.spark.sql.Column,
                       buckets: Int, salt: String,
                       targetPath: String, modelVersion: Long): Unit = {
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val tfs = tgt.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (tfs.exists(tgt)) {
+    // a table a crash left at `.old` is restored first, so the check
+    // sees it
+    if (Sources.recoverTable(spark, targetPath)) {
       val row = spark.read.parquet(targetPath)
         .agg(max(col("model_version"))).head()
       if (!row.isNullAt(0)) {

@@ -146,6 +146,28 @@ class EngineSpec extends AnyFunSuite {
     // rank sums: A=1+3=4, B=2+1=3, C=3+2=5 → order B, A, C
     assert(out.map(_.getAs[String]("k")).toSeq === Seq("B", "A", "C"))
   }
+
+  test("runMain entry points are exactly the kept set (no dead probes)") {
+    // every `object X { def main(` under src/main/scala; adding a probe
+    // must be a deliberate edit of this set
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"main sources not found under ${root.toAbsolutePath}")
+    val objectDecl = """(?m)^\s*(?:(?:private|final|case)\s+)*object\s+(\w+)""".r
+    val mains = java.nio.file.Files.walk(root).iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        val objects = objectDecl.findAllMatchIn(src).map(m => m.start -> m.group(1)).toSeq
+        """\bdef\s+main\s*\(""".r.findAllMatchIn(src).map { m =>
+          objects.filter(_._1 < m.start).lastOption.map(_._2)
+            .getOrElse(s"<main outside an object in $f>")
+        }
+      }.toSet
+    assert(mains === Set("Verify", "Bench", "Pipeline", "FixtureGen",
+      "FamilyBench", "JobProbe"))
+  }
 }
 
 /** End-to-end: every declared query runs on the sf0.001 fixtures and the
@@ -170,72 +192,45 @@ class QueriesSpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracles without queries: $orphans")
   }
 
-  test("tableParallel: guarded repartition fires on under-split scans, rows identical") {
+  test("table: guarded repartition fires on under-split scans, rows identical") {
     val dir = "/root/testdata/sf0.01"
     // default guard (12 MB/split, Sources.scala): the ~1 MB fixture
-    // stays a plain scan — and so does a file sitting just under the
-    // documented boundary, so the comment and the code cannot drift
-    val off = Sources.tableParallel(spark, dir, "lineitem")
+    // stays a plain scan
+    val off = Sources.table(spark, dir, "lineitem")
     assert(!off.queryExecution.executedPlan.toString.contains("Exchange"),
-      "below the byte floor tableParallel must be a no-op")
+      "below the byte floor table() must be a no-op")
     assert(off.schema === Sources.tablePlain(spark, dir, "lineitem").schema)
     // pin the boundary exactly: the single-split fixture fires at
     // minBytes == fileLen and stays plain at fileLen + 1, so the
     // documented ">= minBytes per split" semantics cannot drift
     val len = new java.io.File(s"$dir/lineitem.parquet").length
-    try {
-      spark.conf.set("graft.scan.parallelizeMinBytes", len.toString)
-      assert(Sources.tableParallel(spark, dir, "lineitem")
-        .queryExecution.executedPlan.toString.contains("Exchange"),
-        "at exactly minBytes per split the repartition must fire")
-      spark.conf.set("graft.scan.parallelizeMinBytes", (len + 1).toString)
-      assert(!Sources.tableParallel(spark, dir, "lineitem")
-        .queryExecution.executedPlan.toString.contains("Exchange"),
-        "one byte under minBytes per split must stay a plain scan")
-    } finally spark.conf.unset("graft.scan.parallelizeMinBytes")
-    // table() IS the guarded scan since round 14 (default inverted):
-    // same no-op plan here, same exchange under the forced floor below
-    assert(!Sources.table(spark, dir, "lineitem")
+    assert(Sources.table(spark, dir, "lineitem", len)
       .queryExecution.executedPlan.toString.contains("Exchange"),
-      "table() must carry the same guard (no-op below the floor)")
+      "at exactly minBytes per split the repartition must fire")
+    assert(!Sources.table(spark, dir, "lineitem", len + 1)
+      .queryExecution.executedPlan.toString.contains("Exchange"),
+      "one byte under minBytes per split must stay a plain scan")
     // forced floor: the single-row-group file is under-split for 4 cores,
     // so the deterministic hash repartition must fire at the session's
     // shuffle-partition count — and must not change the row multiset
-    spark.conf.set("graft.scan.parallelizeMinBytes", "1")
-    try {
-      val on = Sources.tableParallel(spark, dir, "lineitem")
-      val plan = on.queryExecution.executedPlan.toString
-      assert(plan.contains("Exchange hashpartitioning(xxhash64"),
-        s"expected a deterministic hash repartition:\n$plan")
-      assert(Sources.table(spark, dir, "lineitem").queryExecution
-        .executedPlan.toString.contains("Exchange hashpartitioning(xxhash64"),
-        "table() must parallelize under the forced floor (guarded default)")
-      assert(!Sources.tablePlain(spark, dir, "lineitem").queryExecution
-        .executedPlan.toString.contains("Exchange"),
-        "tablePlain() must never repartition (the explicit opt-out)")
-      assert(on.rdd.getNumPartitions ===
-        spark.sessionState.conf.numShufflePartitions)
-      def key(df: org.apache.spark.sql.DataFrame) = df
-        .groupBy(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-          col("l_suppkey"))
-        .count().orderBy(col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey"), col("l_suppkey"), col("count")).collect().toSeq
-      assert(key(on) === key(Sources.tablePlain(spark, dir, "lineitem")))
-    } finally spark.conf.unset("graft.scan.parallelizeMinBytes")
+    val on = Sources.table(spark, dir, "lineitem", 1L)
+    val plan = on.queryExecution.executedPlan.toString
+    assert(plan.contains("Exchange hashpartitioning(xxhash64"),
+      s"expected a deterministic hash repartition:\n$plan")
+    assert(!Sources.tablePlain(spark, dir, "lineitem").queryExecution
+      .executedPlan.toString.contains("Exchange"),
+      "tablePlain() must never repartition (the explicit opt-out)")
+    assert(on.rdd.getNumPartitions ===
+      spark.sessionState.conf.numShufflePartitions)
+    def key(df: org.apache.spark.sql.DataFrame) = df
+      .groupBy(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
+        col("l_suppkey"))
+      .count().orderBy(col("l_orderkey"), col("l_linenumber"),
+        col("l_partkey"), col("l_suppkey"), col("count")).collect().toSeq
+    assert(key(on) === key(Sources.tablePlain(spark, dir, "lineitem")))
   }
 
-  test("tableParallel: a typo'd guard conf fails naming the key") {
-    spark.conf.set("graft.scan.parallelizeMinBytes", "12MB")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Sources.tableParallel(spark, "/root/testdata/sf0.01", "lineitem")
-      }
-      assert(e.getMessage.contains("graft.scan.parallelizeMinBytes"),
-        s"error must name the conf key, got: ${e.getMessage}")
-    } finally spark.conf.unset("graft.scan.parallelizeMinBytes")
-  }
-
-  test("tableParallel: directory-backed tables aggregate layout across part files") {
+  test("table: directory-backed tables aggregate layout across part files") {
     // production tables are directories of part files; the layout probe
     // must sum (bytes, effective splits) across them instead of throwing
     val tmp = java.nio.file.Files.createTempDirectory("graft_dir_table")
@@ -245,12 +240,11 @@ class QueriesSpec extends AnyFunSuite {
         .repartition(3).write.mode("overwrite").parquet(dirTable)
       // 3 part files, each its own split: effSplits=3, 3*2 > 4 cores in
       // this suite's session → guard declines even at a forced floor
-      spark.conf.set("graft.scan.parallelizeMinBytes", "1")
-      val df = Sources.table(spark, tmp.toString, "lineitem")
+      val df = Sources.table(spark, tmp.toString, "lineitem", 1L)
+      assert(!df.queryExecution.executedPlan.toString.contains("Exchange"))
       assert(df.count() ===
         Sources.tablePlain(spark, "/root/testdata/sf0.01", "lineitem").count())
     } finally {
-      spark.conf.unset("graft.scan.parallelizeMinBytes")
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
         .foreach(p => java.nio.file.Files.deleteIfExists(p))
