@@ -43,7 +43,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         SpaceSaving(exprs(0), k)
       }))
     // whole-operator extension: plans graft.plans.TopKPerGroup nodes
-    // (Ranking.topKPerGroup also registers this lazily per session)
     e.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
     // optimizer rewrite: row_number-window + rank filter → TopKPerGroup
     e.injectOptimizerRule(_ => graft.plans.RewriteRowNumberTopK)

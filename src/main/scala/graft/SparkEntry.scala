@@ -192,7 +192,10 @@ object SparkEntry {
   // ---------------------------------------------- star-schema extensions
 
   /** Star join: fact ⋈ orders (shuffle/AQE) ⋈ broadcast dims, then grouped
-    * revenue with an exact (order-independent) DECIMAL sum. */
+    * revenue with an exact (order-independent) DECIMAL sum, rounded to
+    * cents while still DECIMAL: rounding the double instead splits
+    * engines at an exact half cent (…516.235 gives .24 in Spark and
+    * .23 in DuckDB). */
   private def q11(s: SparkSession, dir: String): DataFrame = {
     // fact scan parallelized (the Sources.table guard): the single-row-group
     // fixture otherwise runs scan -> 4 BHJ probes -> decimal partial agg
@@ -210,7 +213,7 @@ object SparkEntry {
       .agg(count(lit(1)).as("n_items"),
         Aggregates.exactSum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
       .select(col("r_name"), col("n_name"), col("n_items"),
-        round(col("rev").cast("double"), 2).as("revenue"))
+        round(col("rev"), 2).cast("double").as("revenue"))
       .orderBy(col("r_name").asc, col("n_name").asc)
   }
 
@@ -3846,10 +3849,10 @@ object SparkEntry {
       .orderBy(col("l_returnflag").asc)
   }
 
-  /** Per-group top-k via the custom TopKPerGroup operator (logical node
-    * + planner strategy + bounded-heap two-phase physical plan): top-3
-    * orders by price per priority class. The oracle is the row_number
-    * window idiom — same result, different physical strategy. */
+  /** Per-group top-k via [[Ranking.topKPerGroup]], which the
+    * RewriteRowNumberTopK rule plans as the bounded-heap two-phase
+    * TopKPerGroup operator: top-3 orders by price per priority class.
+    * The oracle is the same row_number window idiom in SQL. */
   private def q49(s: SparkSession, dir: String): DataFrame =
     Ranking.topKPerGroup(
         Sources.tablePlain(s, dir, "orders")
@@ -6034,7 +6037,7 @@ object SparkEntry {
           FROM events""",
     "q11_star_revenue" ->
       s"""SELECT r_name, n_name, count(*) AS n_items,
-                 round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue
+                 CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
           FROM lineitem
           JOIN orders ON l_orderkey = o_orderkey
           JOIN customer ON o_custkey = c_custkey

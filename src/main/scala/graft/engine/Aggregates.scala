@@ -326,8 +326,9 @@ object Aggregates {
     * distinct domain.
     *
     * Plan shape: distinct(group, item) collapses duplicates map-side,
-    * then the bounded-heap TopKPerGroup keeps O(k) rows per group —
-    * never a full sort, never a per-group collect. Groups with fewer
+    * then [[Ranking.topKPerGroup]]'s row_number idiom, planned as the
+    * bounded-heap TopKPerGroup, keeps O(k) rows per group — never a
+    * full sort, never a per-group collect. Groups with fewer
     * than k distinct items report the EXACT count (estimate = n).
     * Output: group, `n_hashes` (≤ k), `kth_hash`, `est_distinct`. */
   def kmvDistinct(df: DataFrame, groupCol: String, item: Column,

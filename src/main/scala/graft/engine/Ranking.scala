@@ -49,50 +49,27 @@ object Ranking {
   def topK(df: DataFrame, order: Seq[Column], k: Int): DataFrame =
     df.orderBy(order: _*).limit(k)
 
-  /** PER-GROUP top-k through the custom [[graft.plans.TopKPerGroup]]
-    * operator (logical node + strategy + two-phase physical plan): the
-    * per-group twin of TakeOrderedAndProject. Unlike the
-    * `row_number().over(window) <= k` idiom — which shuffles and FULLY
-    * SORTS every group — this keeps bounded k-row heaps per group and
-    * prunes map-side before the exchange, so shuffle volume is
-    * ≤ k·groups and memory is O(k·groups per partition). Adds a LongType
-    * 1-based `rank` column ordered by `orderCols` (name, ascending?).
+  /** PER-GROUP top-k: the `row_number().over(window) <= k` idiom,
+    * which [[graft.plans.RewriteRowNumberTopK]] plans as the
+    * bounded-heap [[graft.plans.TopKPerGroup]] operator on sessions
+    * built with [[graft.GraftExtensions]] (the per-group twin of
+    * TakeOrderedAndProject: k-row heaps per group, pruned map-side
+    * before the exchange, so shuffle volume is ≤ k·groups and no group
+    * is fully sorted; k above the rule's bound keeps the window plan).
+    * Adds a LongType 1-based `rank` column ordered by `orderCols`
+    * (name, ascending?).
     *
     * Ties: ranks follow the sort order; add tie-break columns to
     * `orderCols` (as the queries here do) for deterministic results. */
   def topKPerGroup(df: DataFrame, groupCols: Seq[String],
                    orderCols: Seq[(String, Boolean)], k: Int): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge
-    import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, Descending, SortOrder}
-    import org.apache.spark.sql.types.LongType
-    val spark = df.sparkSession
-    // idempotently register the planner strategy on this session
-    if (!spark.experimental.extraStrategies.contains(graft.plans.TopKPerGroupStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.TopKPerGroupStrategy
-    val child = GraftSqlBridge.analyzed(df)
-    // resolve like the rest of the DataFrame API: case-insensitive unless
-    // spark.sql.caseSensitive, and ambiguity is an error, not first-match
-    val caseSensitive =
-      spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
-    def resolve(n: String) = {
-      val hits = child.output.filter(a =>
-        if (caseSensitive) a.name == n else a.name.equalsIgnoreCase(n))
-      hits match {
-        case Seq(one) => one
-        case Seq() => throw new IllegalArgumentException(
-          s"column $n not in (${child.output.map(_.name).mkString(", ")})")
-        case many => throw new IllegalArgumentException(
-          s"column $n is ambiguous: ${many.mkString(", ")}")
-      }
-    }
-    val node = graft.plans.TopKPerGroup(
-      groupCols.map(resolve),
-      orderCols.map { case (n, asc) =>
-        SortOrder(resolve(n), if (asc) Ascending else Descending) },
-      k,
-      AttributeReference("rank", LongType, nullable = false)(),
-      child)
-    GraftSqlBridge.ofRows(spark, node)
+    require(k > 0, "top-k needs k > 0")
+    require(groupCols.nonEmpty,
+      "per-group top-k needs group keys (global top-k is topK)")
+    val w = Window.partitionBy(groupCols.map(col): _*).orderBy(orderCols.map {
+      case (c, asc) => if (asc) col(c).asc else col(c).desc }: _*)
+    df.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .withColumn("rank", col("rank").cast("long"))
   }
 }

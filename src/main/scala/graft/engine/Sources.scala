@@ -98,22 +98,21 @@ object Sources {
     "region" -> region, "events" -> events, "documents" -> documents,
     "embeddings" -> embeddings)
 
-  /** Idempotent keyed write — the engine analog of the reference's
-    * unique-index + bulk-upsert ingest (reference:
-    * src/ingest/ingest_laps.py:57-68): dedup to the latest row per key,
-    * then overwrite the target. Re-running the same ingest produces an
-    * identical table (re-run ≡ upsert). At scale the target would be
-    * partitioned (`partitionBy`) so an incremental run only rewrites the
-    * affected partitions. */
-  def idempotentWrite(df: org.apache.spark.sql.DataFrame, keys: Seq[String],
-                      versionCol: String, path: String,
-                      partitionCols: Seq[String] = Nil): Unit = {
-    val deduped = Dedup.latestByKey(df, keys,
-      Seq(org.apache.spark.sql.functions.col(versionCol)))
-    val w = deduped.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(path)
-  }
+  /** Latest-wins upsert into the parquet table at `path` — the engine
+    * analog of the reference's unique-index + bulk-upsert ingest
+    * (reference: src/ingest/ingest_laps.py:57-68) and the one MERGE
+    * write behind the streaming sinks. A single [[Dedup.latestByKey]]
+    * pass over table ∪ batch keeps the newest row per key, swapped in
+    * through the crash-safe [[replaceTable]]: keys the batch does not
+    * carry survive, newer versions replace older ones, and re-running a
+    * batch leaves the table unchanged. Ties on equal versions are
+    * broken arbitrarily. */
+  def upsert(df: DataFrame, keys: Seq[String], versionCol: String,
+             path: String): Unit =
+    replaceTable(df.sparkSession, path) { current =>
+      Dedup.latestByKey(current.fold(df)(_.unionByName(df)), keys,
+        Seq(org.apache.spark.sql.functions.col(versionCol)))
+    }
 
   /** Hive-style partitioned layout (`path/col=value/...`) — the 100 TB
     * table layout: a predicate on a partition column prunes directories
@@ -150,16 +149,6 @@ object Sources {
     * when uncompressed). */
   def writeJsonl(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").json(path)
-
-  /** Schema-pinned CSV scan. Same explicit-schema rationale as
-    * [[readJsonl]]; timestamps parse with the given pattern. */
-  def readCsv(spark: SparkSession, path: String, schema: StructType,
-              header: Boolean = true, delimiter: String = ","): DataFrame =
-    spark.read.schema(schema)
-      .option("header", header.toString)
-      .option("delimiter", delimiter)
-      .option("mode", "FAILFAST")
-      .csv(path)
 
   /** CSV writer, header included. */
   def writeCsv(df: DataFrame, path: String, delimiter: String = ","): Unit =
@@ -207,7 +196,7 @@ object Sources {
   }
 
   /** Crash-safe rewrite of the parquet table at `path` — the one swap
-    * behind [[compact]] and the streaming upsert sinks. `next` maps the
+    * behind [[compact]] and [[upsert]]. `next` maps the
     * current table (None when there is none yet) to its new contents,
     * written ONCE to `<path>.staging` (overwrite must not
     * read-while-write); the target is then moved aside to `<path>.old`,

@@ -21,11 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object ZOrder {
 
-  /** Morton interleave of the low `bits` bits of two non-negative longs:
-    * bit i of `a` lands at position 2i, bit i of `b` at 2i+1. */
-  def zValue(a: Column, b: Column, bits: Int): Column =
-    zValueN(Seq(a, b), bits)
-
   /** N-column Morton interleave (round-robin): bit i of column j lands
     * at position i·n + j, so every column contributes equally to every
     * level of the curve. `bits · n` must stay ≤ 63 (positive LONG) —

@@ -201,8 +201,6 @@ object Graph {
       prevSum = s
       i += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] rounds=$i converged=$converged")
     if (!converged) {
       escalations.incrementAndGet()
       // escalate, never crash: the partial labels are valid intra-

@@ -120,8 +120,8 @@ object Multimodal {
       it.map { rowId =>
         val id = imageContentId(rowId)
         val swap = imageNearTwin(rowId)
-        val w = (8 + id % 5).toInt
-        val h = (8 + id % 4).toInt
+        val w = imageWidth(rowId)
+        val h = imageHeight(rowId)
         val px = new Array[Byte](w * h)
         var y = 0
         while (y < h) {

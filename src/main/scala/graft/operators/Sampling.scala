@@ -84,8 +84,10 @@ object Sampling {
     * u = (h32 + 1) / 2³² ∈ (0, 1] from the row id's md5 (uniform, never
     * 0 so the power is defined); `pow` carries the usual ±1-ulp library
     * license, so keys round at 6 dp before ranking (the BM25/ln
-    * discipline) with the id as total tie-break. Selection runs on the
-    * bounded-heap TopKPerGroup — O(n) state per group, no full sort.
+    * discipline) with the id as total tie-break. Selection is
+    * [[graft.engine.Ranking.topKPerGroup]]'s row_number idiom, planned
+    * as the bounded-heap TopKPerGroup — O(n) state per group, no full
+    * sort.
     * Weights must be strictly positive. */
   def weightedSelect(df: DataFrame, idCol: Column, groupCol: String,
                      weight: Column, n: Int, salt: String): DataFrame = {

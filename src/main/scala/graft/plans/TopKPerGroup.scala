@@ -20,8 +20,8 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   *     partition is pruned to ≤ k rows per group BEFORE the exchange —
   *     shuffle volume drops from |rows| to ≤ k·|groups per partition|,
   *     the same shape partial aggregation gives groupBy. Heap memory is
-  *     capped at `spark.graft.topk.maxBufferedRows` bufferedRows row copies
-  *     per partition; past the cap, rows of not-yet-full groups pass
+  *     capped at 4M buffered row copies per partition; past the cap,
+  *     rows of not-yet-full groups pass
   *     through unpruned (correct — the final phase re-prunes) so a
   *     high-cardinality grouping degrades to a partial prune instead of
   *     an OOM;
@@ -33,6 +33,13 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   *
   * No full sort of the input ever happens; per-group cost is O(n·log k)
   * insertion + O(k·log k) final ordering.
+  *
+  * Why not Spark's built-in `WindowGroupLimit`: swapping this operator
+  * for it was measured on Spark 4.1 over 4 ABAB perfbench pairs (4-CPU
+  * VM, `--seconds 14`) and lost — `lap_analytics` op_p50_s ×1.24,
+  * 1.00, 1.24, 1.26 (median 0.434 → 0.539 s), `race_upsert` ops_per_s
+  * 0.749 → 0.694 — because it adds a full map-side sort ahead of q09's
+  * exchange. Re-measure before proposing that swap again.
   */
 case class TopKPerGroup(groupExprs: Seq[Expression], order: Seq[SortOrder],
                         k: Int, rankAttr: Attribute, child: LogicalPlan)
@@ -53,16 +60,16 @@ case class TopKPerGroup(groupExprs: Seq[Expression], order: Seq[SortOrder],
   * group is unspecified. */
 case class TopKPerGroupPartialExec(groupExprs: Seq[Expression],
                                    order: Seq[SortOrder], k: Int,
-                                   child: SparkPlan) extends UnaryExecNode {
+                                   child: SparkPlan,
+    private[graft] val maxBuffered: Long = TopKPerGroupPartialExec.MaxBufferedRows)
+    extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output
   override def outputPartitioning: Partitioning = child.outputPartitioning
   override def requiredChildDistribution: Seq[Distribution] =
     UnspecifiedDistribution :: Nil
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val (g, o, kk, attrs) = (groupExprs, order, k, child.output)
-    val maxBuffered = conf.getConfString(
-      "spark.graft.topk.maxBufferedRows", "4194304").toLong
+    val (g, o, kk, attrs, budget) = (groupExprs, order, k, child.output, maxBuffered)
     child.execute().mapPartitions { iter =>
       new Iterator[InternalRow] {
         private val keyProj = UnsafeProjection.create(g, attrs)
@@ -80,7 +87,7 @@ case class TopKPerGroupPartialExec(groupExprs: Seq[Expression],
             val row = iter.next()
             val key = keyProj(row)
             var heap = heaps.get(key)
-            if (heap == null && bufferedRows < maxBuffered) {
+            if (heap == null && bufferedRows < budget) {
               // initial capacity capped: k can be large relative to the
               // actual group size, and PriorityQueue allocates eagerly
               heap = new java.util.PriorityQueue[InternalRow](
@@ -90,7 +97,7 @@ case class TopKPerGroupPartialExec(groupExprs: Seq[Expression],
             if (heap == null) {
               pending = row                    // over budget: pass through
             } else if (heap.size() < kk) {
-              if (bufferedRows < maxBuffered) { heap.offer(row.copy()); bufferedRows += 1 }
+              if (bufferedRows < budget) { heap.offer(row.copy()); bufferedRows += 1 }
               else pending = row               // group not full but over budget
             } else {
               // full heap: offer+evict keeps memory flat, so prune even
@@ -124,6 +131,12 @@ case class TopKPerGroupPartialExec(groupExprs: Seq[Expression],
   }
   override protected def withNewChildInternal(c: SparkPlan): SparkPlan =
     copy(child = c)
+}
+
+object TopKPerGroupPartialExec {
+  /** Row copies the partial phase buffers per partition before it
+    * degrades to pass-through. */
+  private val MaxBufferedRows = 4194304L
 }
 
 /** Reduce-side phase: requires clustering + intra-partition ordering on
@@ -199,9 +212,8 @@ case class TopKPerGroupFinalExec(groupExprs: Seq[Expression],
 }
 
 /** Plans [[TopKPerGroup]] as partial → (exchange + group-key sort) →
-  * final. Registered per-session via `spark.experimental.extraStrategies`
-  * (done lazily by [[graft.engine.Ranking.topKPerGroup]]) or globally via
-  * [[graft.GraftExtensions]]. */
+  * final. Registered by [[graft.GraftExtensions]], next to the
+  * [[RewriteRowNumberTopK]] rule that creates the node. */
 object TopKPerGroupStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerGroup(g, o, k, rank, child) =>

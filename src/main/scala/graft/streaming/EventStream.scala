@@ -81,44 +81,27 @@ object EventStream {
   }
 
   /** Streaming → table upsert via `foreachBatch`: each micro-batch is
-    * deduplicated to the newest row per key, unioned with the existing
-    * target (if any), re-deduplicated, and overwritten — MERGE semantics
-    * built from batch operators, the streaming twin of
-    * [[graft.engine.Sources.idempotentWrite]] (and of the reference's
+    * merged into the target through [[graft.engine.Sources.upsert]] —
+    * one latest-wins pass over table ∪ batch, swapped in crash-safely;
+    * MERGE semantics built from batch operators (the reference's
     * bulk-upsert ingest, reference: src/ingest/ingest_laps.py:57-68).
     * Re-processing a batch after a failure converges to the same table:
     * latest-wins by `versionCol` is idempotent.
     *
     * At scale the overwrite becomes a partition-scoped or MERGE-capable
     * table-format write (the micro-batch only touches its own keys);
-    * the dedup-union-dedup shape is unchanged. Runs the stream to
-    * completion over the available input (Trigger.AvailableNow). */
+    * the latest-wins pass over table ∪ batch is unchanged. Runs the
+    * stream to completion over the available input (Trigger.AvailableNow). */
   def upsertStreamToTable(stream: DataFrame, keys: Seq[String],
                           versionCol: String, targetPath: String): Unit = {
     val q = stream.writeStream
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        mergeBatchIntoTable(batch.toDF(), keys, versionCol, targetPath)
+        Sources.upsert(batch.toDF(), keys, versionCol, targetPath)
       }
       .start()
     try q.processAllAvailable() finally q.stop()
-  }
-
-  /** The per-micro-batch MERGE body shared by the foreachBatch sinks:
-    * dedup the incoming batch to the newest row per key, union with
-    * the existing target (if any), re-dedup, and swap it in through
-    * the crash-safe [[graft.engine.Sources.replaceTable]]. */
-  private def mergeBatchIntoTable(batch: DataFrame, keys: Seq[String],
-                                  versionCol: String,
-                                  targetPath: String): Unit = {
-    val incoming = graft.engine.Dedup.latestByKey(
-      batch, keys, Seq(col(versionCol)))
-    Sources.replaceTable(batch.sparkSession, targetPath) {
-      case Some(existing) => graft.engine.Dedup.latestByKey(
-        existing.unionByName(incoming), keys, Seq(col(versionCol)))
-      case None => incoming
-    }
   }
 
   /** Streaming exact dedup with bounded state: drops re-deliveries of
@@ -337,7 +320,7 @@ object EventStream {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        mergeBatchIntoTable(
+        Sources.upsert(
           dsirScore(batch.toDF(), model, buckets, salt)
             .withColumn("model_version", lit(modelVersion)),
           Seq("doc_id"), "model_version", targetPath)

@@ -1,7 +1,6 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{ClassicConversions, ColumnConversions}
 
 /** Bridge to the classic Column ↔ catalyst Expression converters, which
@@ -16,17 +15,6 @@ object GraftSqlBridge {
 
   def expression(c: Column): Expression =
     ColumnConversions.expression(c)
-
-  /** Wrap a custom logical plan as a DataFrame (classic Dataset.ofRows is
-    * private[sql]) — how custom operators like graft.plans.TopKPerGroup
-    * enter the DataFrame API. */
-  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(
-      spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** The analyzed logical plan of a DataFrame (for building custom
-    * operator nodes over resolved child output). */
-  def analyzed(df: Dataset[_]): LogicalPlan = df.queryExecution.analyzed
 
   /** Register a SQL function on an existing session (sessionState is
     * private[sql]; for new sessions prefer graft.GraftExtensions via

@@ -126,17 +126,25 @@ class EngineSpec extends AnyFunSuite {
     assert(out.slope.isEmpty)
   }
 
-  test("idempotentWrite: re-running the same ingest is a no-op (upsert semantics)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+  test("upsert: a re-run is a no-op; a second batch merges latest-wins") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString + "/t"
     val v1 = Seq((1L, "a", 10.0, 1L), (1L, "a", 11.0, 2L), (2L, "b", 20.0, 1L))
       .toDF("k", "t", "v", "version")
-    Sources.idempotentWrite(v1, Seq("k", "t"), "version", dir)
+    Sources.upsert(v1, Seq("k", "t"), "version", dir)
     val first = spark.read.parquet(dir).orderBy("k").collect().toSeq
-    Sources.idempotentWrite(v1, Seq("k", "t"), "version", dir)
+    Sources.upsert(v1, Seq("k", "t"), "version", dir)
     val second = spark.read.parquet(dir).orderBy("k").collect().toSeq
     assert(first === second)
     assert(first.size === 2)  // latest version per key survives
     assert(first.find(_.getAs[Long]("k") == 1L).get.getAs[Double]("v") === 11.0)
+    // a different batch: a newer version replaces (2,b), an older one
+    // loses to (1,a), a new key lands, and no existing key is dropped
+    val v2 = Seq((2L, "b", 21.0, 2L), (1L, "a", 9.0, 1L), (3L, "c", 30.0, 1L))
+      .toDF("k", "t", "v", "version")
+    Sources.upsert(v2, Seq("k", "t"), "version", dir)
+    val merged = spark.read.parquet(dir).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getLong(3))).toSet
+    assert(merged === Set((1L, "a", 11.0, 2L), (2L, "b", 21.0, 2L), (3L, "c", 30.0, 1L)))
   }
 
   test("paretoTopK composite rank ordering") {

@@ -1072,28 +1072,31 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("TopKPerGroup partial phase degrades to pass-through past its row budget") {
-    val prev = spark.conf.getOption("spark.graft.topk.maxBufferedRows")
-    spark.conf.set("spark.graft.topk.maxBufferedRows", "4")
-    try {
-      // many groups × few rows: budget of 4 buffered rows forces the
-      // partial phase to pass most rows through; the final phase must
-      // still produce the exact per-group top-k
+    import graft.plans.TopKPerGroupPartialExec
+    // many groups × few rows: budget of 4 buffered rows forces the
+    // partial phase to pass most rows through; the final phase must
+    // still produce the exact per-group top-k. The budget is set on the
+    // physical plan, which is built with AQE off so the tree is plain.
+    val aqe = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    val plan = try {
       val df = spark.range(200).selectExpr(
         "id % 50 as g", "id as v").repartition(2)
-      val got = graft.engine.Ranking.topKPerGroup(
-          df, Seq("g"), Seq("v" -> false), 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val expect = (0L until 50L).flatMap { g =>
-        val vs = (0L until 200L).filter(_ % 50 == g).sorted(Ordering[Long].reverse).take(2)
-        vs.zipWithIndex.map { case (v, i) => (g, v, (i + 1).toLong) }
-      }.toSet
-      assert(got === expect)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.graft.topk.maxBufferedRows", v)
-        case None => spark.conf.unset("spark.graft.topk.maxBufferedRows")
-      }
+      graft.engine.Ranking.topKPerGroup(df, Seq("g"), Seq("v" -> false), 2)
+        .queryExecution.executedPlan
+    } finally spark.conf.set(aqe, prev)
+    val budgeted = plan.transform {
+      case p: TopKPerGroupPartialExec => p.copy(maxBuffered = 4)
     }
+    assert(budgeted.collect { case p: TopKPerGroupPartialExec => p.maxBuffered } === Seq(4L))
+    val got = budgeted.executeCollect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val expect = (0L until 50L).flatMap { g =>
+      val vs = (0L until 200L).filter(_ % 50 == g).sorted(Ordering[Long].reverse).take(2)
+      vs.zipWithIndex.map { case (v, i) => (g, v, (i + 1).toLong) }
+    }.toSet
+    assert(got === expect)
   }
 
   test("bloom semi-join equals the exact semi join; empty build side is empty") {
