@@ -35,7 +35,10 @@ object Bench {
     // SPARK_GRAFT_BENCH_ONLY / _SKIP restrict the catalog (comma lists)
     // for partitioned runs at SFs where a known output-bound family
     // needs separate treatment.
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
+    val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES").fold(2) { v =>
+      v.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_BENCH_PASSES must be an integer >= 1, got '$v'"))
+    }
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").toSet)
     val skip = sys.env.get("SPARK_GRAFT_BENCH_SKIP")
@@ -82,7 +85,7 @@ object Bench {
           -1.0  // failures visible as negative time, not a fast "success"
         }
       }
-      var times = Seq.fill(math.max(1, math.min(passes, 2)))(onePass())
+      var times = Seq.fill(math.min(passes, 2))(onePass())
       // adaptive third pass, two triggers: (a) both passes slow — the
       // query either IS slow (third changes nothing material) or both
       // absorbed tenant noise (third recovers the steady state);

@@ -9,9 +9,7 @@ import graft.functions.{DotProduct, NfcNormalize, SpaceSaving}
 /** SparkSessionExtensions entry point: makes the engine's custom Catalyst
   * expressions available to plain SQL. Activate on any cluster with
   *   spark.sql.extensions=graft.GraftExtensions
-  * or SparkSession.builder().withExtensions(new GraftExtensions). For an
-  * already-running session, `GraftSqlBridge.registerFunction` does the
-  * same registration directly.
+  * or SparkSession.builder().withExtensions(new GraftExtensions).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

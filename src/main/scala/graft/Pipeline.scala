@@ -183,11 +183,6 @@ object Pipeline {
       .union(imageEdgesFrom(imageFpsOf(spark, docs)))
       .union(audioEdgesFrom(audioFpsOf(spark, docs)))
 
-  /** @param checkpointDir reliable checkpoint location for the
-    *        connected-components rounds inside near-dup dedup (stage
-    *        3); None = executor-memory localCheckpoint, right for
-    *        local mode — on a cluster pass a warehouse/HDFS path so a
-    *        lost executor replays from storage (see Graph.cut). */
   /** @param multimodal stage 3 clusters over the UNION of the text,
     *        image and audio dedup arms ([[multimodalPairs]]) instead
     *        of text simhash alone — the knob for corpora whose
@@ -251,13 +246,12 @@ object Pipeline {
   def curate(spark: SparkSession, docs: DataFrame,
              mixRates: Map[String, Double], mixSalt: String,
              outDir: Option[String],
-             checkpointDir: Option[String] = None,
              knobs: QualityKnobs = QualityKnobs(),
              multimodal: Boolean = false,
              embeddings: Option[DataFrame] = None,
              embedKnobs: EmbedKnobs = EmbedKnobs()): StageCounts =
     curateWithArtifacts(spark, docs, mixRates, mixSalt, outDir,
-      checkpointDir, knobs, multimodal, embeddings, embedKnobs)._1
+      knobs, multimodal, embeddings, embedKnobs)._1
 
   /** [[curate]] that ALSO returns the staged artifacts the next
     * [[curateIncrement]] consumes. The artifact frames are lazy views
@@ -266,7 +260,6 @@ object Pipeline {
   def curateWithArtifacts(spark: SparkSession, docs: DataFrame,
              mixRates: Map[String, Double], mixSalt: String,
              outDir: Option[String],
-             checkpointDir: Option[String] = None,
              knobs: QualityKnobs = QualityKnobs(),
              multimodal: Boolean = false,
              embeddings: Option[DataFrame] = None,
@@ -363,8 +356,7 @@ object Pipeline {
           .union(audioEdgesFrom(audFps.get))
       else text
     }
-    val clusters = Graph.connectedComponents(pairs, "doc_a", "doc_b",
-        checkpointDir = checkpointDir)
+    val clusters = Graph.connectedComponents(pairs, "doc_a", "doc_b")
       .localCheckpoint()
     val dropIds = clusters.filter(col("n") =!= col("component"))
       .select(col("n"))
@@ -395,7 +387,7 @@ object Pipeline {
             graft.operators.Similarity.nearDupPairsLsh(keptEmb,
               embedKnobs.minCosine, embedKnobs.planes, embedKnobs.tables,
               embedKnobs.bucketCap),
-            "vec_a", "vec_b", checkpointDir = checkpointDir)
+            "vec_a", "vec_b")
           .localCheckpoint()
         val dupVecs = vecCC.filter(col("n") =!= col("component"))
           .select(col("n").as("vec_id"))
@@ -539,13 +531,12 @@ object Pipeline {
                       batch: DataFrame,
                       mixRates: Map[String, Double], mixSalt: String,
                       knobs: QualityKnobs = QualityKnobs(),
-                      checkpointDir: Option[String] = None,
                       multimodal: Boolean = false,
                       embeddings: Option[DataFrame] = None,
                       embedKnobs: EmbedKnobs = EmbedKnobs())
       : (DataFrame, DataFrame, IncrementCounts) =
     curateIncrementWithArtifacts(spark, corpus, batch, mixRates, mixSalt,
-      knobs, checkpointDir, multimodal, embeddings, embedKnobs)._1
+      knobs, multimodal, embeddings, embedKnobs)._1
 
   /** [[curateIncrement]] that ALSO returns the UPDATED corpus
     * artifacts — the handle set for TOMORROW'S batch, so increments
@@ -564,7 +555,6 @@ object Pipeline {
                       corpus: CorpusArtifacts, batch: DataFrame,
                       mixRates: Map[String, Double], mixSalt: String,
                       knobs: QualityKnobs = QualityKnobs(),
-                      checkpointDir: Option[String] = None,
                       multimodal: Boolean = false,
                       embeddings: Option[DataFrame] = None,
                       embedKnobs: EmbedKnobs = EmbedKnobs())
@@ -651,7 +641,7 @@ object Pipeline {
             col("fp_lo").as("ph_lo")),
           DedupKnobs.AudioMbMaxHamming, DedupKnobs.AudioClassBucketCap))
     val ccInc = Graph.contractedComponents(corpus.clusters, incPairs,
-        "doc_a", "doc_b", checkpointDir = checkpointDir)
+        "doc_a", "doc_b")
       .localCheckpoint()
     val dropIds = ccInc.filter(col("n") =!= col("component"))
       .select(col("n"))
@@ -685,7 +675,7 @@ object Pipeline {
             embedKnobs.minCosine, embedKnobs.planes, embedKnobs.tables,
             embedKnobs.bucketCap)
         val vecCC = Graph.contractedComponents(corpus.vecClusters.get,
-          incVecPairs, "vec_a", "vec_b", checkpointDir = checkpointDir)
+          incVecPairs, "vec_a", "vec_b")
         val dropDocs = vecCC
           .filter(col("n") > maxCorpusId && col("n") =!= col("component"))
           .select(col("n").as("doc_id"))

@@ -719,7 +719,8 @@ object SparkEntry {
     * re-aggregation (Expand runs over the tiny per-group result, not the
     * fact — see Aggregates.rollupReagg). NULLS FIRST pinned on both
     * sides — Spark's asc default vs DuckDB's NULLS LAST default would
-    * otherwise reorder subtotal rows. */
+    * otherwise reorder subtotal rows. Revenue is rounded to cents while
+    * still DECIMAL, like q11: the exact sum carries sub-cent digits. */
   private def q39(s: SparkSession, dir: String): DataFrame =
     Aggregates.rollupReagg(Sources.table(s, dir, "lineitem"),
         keys = Seq(col("l_returnflag"), col("l_linestatus")),
@@ -727,7 +728,7 @@ object SparkEntry {
           Aggregates.exactSum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev")),
         reaggs = Seq(sum(col("n_items")).as("n_items"), sum(col("rev")).as("rev")))
       .select(col("l_returnflag"), col("l_linestatus"), col("n_items"),
-        round(col("rev").cast("double"), 2).as("revenue"))
+        round(col("rev"), 2).cast("double").as("revenue"))
       .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
 
   /** Static pivot: per-user average value by event type (CASE-based
@@ -7438,7 +7439,7 @@ object SparkEntry {
           FROM lineitem""",
     "q39_rollup_revenue" ->
       s"""SELECT l_returnflag, l_linestatus, count(*) AS n_items,
-                 round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue
+                 CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
           FROM lineitem
           GROUP BY ROLLUP (l_returnflag, l_linestatus)
           ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""",

@@ -114,58 +114,6 @@ object Sources {
         Seq(org.apache.spark.sql.functions.col(versionCol)))
     }
 
-  /** Hive-style partitioned layout (`path/col=value/...`) — the 100 TB
-    * table layout: a predicate on a partition column prunes directories
-    * at PLANNING time (`PartitionFilters` in the scan, zero I/O for
-    * pruned partitions), independent of parquet row-group stats. Choose
-    * partition columns with bounded cardinality (day, region), never
-    * high-cardinality keys — 10⁶ tiny directories is its own failure
-    * mode. Combine with `spark.sql.files.maxPartitionBytes` so each
-    * task reads ~128 MB. */
-  def partitionedWrite(df: org.apache.spark.sql.DataFrame,
-                       partitionCols: Seq[String], path: String): Unit =
-    df.write.partitionBy(partitionCols: _*).mode("overwrite").parquet(path)
-
-  /** Schema-pinned JSON-Lines scan — the interchange format of
-    * training-data pipelines (one JSON doc per line, splittable, so a
-    * 100 TB corpus parallelizes by byte range like any text source).
-    * The explicit schema avoids Spark's whole-file inference pass AND
-    * pins column types against heterogeneous lines; corrupt lines land
-    * in `_corrupt_record` when `keepCorrupt` (PERMISSIVE) instead of
-    * failing the job, the right default for web-scale scrapes. (Spark
-    * disallows queries that touch ONLY `_corrupt_record` on the raw
-    * scan — cache() the frame before corrupt-rate audits.) */
-  def readJsonl(spark: SparkSession, path: String, schema: StructType,
-                keepCorrupt: Boolean = false): DataFrame = {
-    val s = if (keepCorrupt)
-      StructType(schema.fields :+ StructField("_corrupt_record", StringType))
-    else schema
-    spark.read.schema(s)
-      .option("mode", if (keepCorrupt) "PERMISSIVE" else "FAILFAST")
-      .json(path)
-  }
-
-  /** JSON-Lines writer (one doc per line, gzip-friendly, splittable
-    * when uncompressed). */
-  def writeJsonl(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
-
-  /** CSV writer, header included. */
-  def writeCsv(df: DataFrame, path: String, delimiter: String = ","): Unit =
-    df.write.mode("overwrite")
-      .option("header", "true").option("delimiter", delimiter)
-      .csv(path)
-
-  /** Schema-pinned ORC scan — the second columnar format (both ship in
-    * Spark; ORC carries its own footer schema exactly like parquet, so
-    * the pinned StructType plays the same fail-loud role). */
-  def readOrc(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).orc(path)
-
-  /** ORC writer (zlib default; splittable stripes). */
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
-
   /** Register every fixture table as a temp view so the WHOLE engine is
     * reachable through pure `spark.sql(...)` — the injected functions
     * (graft_dot, graft_nfc) already are via [[graft.GraftExtensions]],
@@ -251,24 +199,12 @@ object Sources {
     * deserves. TIMESTAMP(MICROS) INT64 reads as a pinned LONG with no
     * conf at all. */
 
-  /** ONE definition of the micros-long → timestamp derivation, shared by
-    * the pinned and inferred read paths — drift between the two would
-    * silently break their drop-in interchangeability. The pinned path
-    * reads `ts` as LONG µs; the inferred path gets whatever the footer
-    * declares (TIMESTAMP_NTZ for the µs fixtures), so it is normalized
-    * back to the same (`ts`: LONG µs, `ts_utc`: timestamp) shape — all
-    * harness sessions run in UTC, making the NTZ→instant cast exact. */
-  private def deriveTsUtc(df: DataFrame): DataFrame =
-    if (!df.columns.contains("ts")) df
-    else df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts_utc",
-          org.apache.spark.sql.functions.expr("timestamp_micros(ts)"))
-      case _ =>
-        import org.apache.spark.sql.functions.{col, unix_micros}
-        val utc = col("ts").cast(org.apache.spark.sql.types.TimestampType)
-        df.withColumn("ts_utc", utc).withColumn("ts", unix_micros(utc))
-    }
+  /** `ts_utc` derived from the raw µs `ts` — ONE definition shared by
+    * the batch scan ([[tablePlain]]) and the streaming scan
+    * (`EventStream.readEvents`), so the two cannot drift. */
+  private[graft] def deriveTsUtc(df: DataFrame): DataFrame =
+    df.withColumn("ts_utc",
+      org.apache.spark.sql.functions.expr("timestamp_micros(ts)"))
 
   /** The ungated scan: pinned schema, no parallelizing repartition.
     * Opt-out for shapes where the repartition hop is a measured loss —
@@ -374,31 +310,4 @@ object Sources {
           org.apache.spark.sql.functions.col(key)))
     } else df
   }
-
-  /** Inference-tolerant scan — the ad-hoc-table ergonomics of the
-    * reference's connector, which samples documents to discover a
-    * schema (reference: src/processing/mongo_avg_laptime_by_driver
-    * .py:30) instead of demanding a declared one. For parquet the
-    * footer IS the schema (zero sampling cost, exact types), so this
-    * reads whatever the file declares; the events `ts`/`ts_utc`
-    * normalization still applies when a `ts` column is present, so
-    * inferred and pinned scans stay drop-in interchangeable. Prefer
-    * [[table]] for production pipelines: a pinned StructType fails
-    * LOUDLY on upstream drift, where inference silently changes
-    * downstream types — the same trade the reference makes in reverse.
-    * Pair with `Cleaning.filterIfPresent` for columns that may be
-    * absent in ad-hoc data. */
-  def tableInferred(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    deriveTsUtc(spark.read.parquet(s"$sfDir/$name.parquet"))
-
-  /** Sampled-inference JSON-Lines scan — the schemaless half of
-    * [[readJsonl]]: discover the schema from a fraction of the lines
-    * (the direct analog of the reference connector's sample-N-docs
-    * inference), accepting one inference pass over `samplingRatio` of
-    * the input. At 100 TB run this once on a slice, then PIN the
-    * result via [[readJsonl]] — inference cost scales with the corpus,
-    * a pinned schema is free. */
-  def inferJsonl(spark: SparkSession, path: String,
-                 samplingRatio: Double = 1.0): DataFrame =
-    spark.read.option("samplingRatio", samplingRatio.toString).json(path)
 }

@@ -15,21 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Lineage cuts for iterative plans: executor-local blocks by
-    * default (see [[cut]] for the storage-level policy), or a RELIABLE
-    * `checkpoint()` when `checkpointDir` (HDFS/object-store path on a
-    * real cluster) is passed, so a lost executor replays from storage
-    * instead of failing the job. */
-  // last dir REQUESTED per context, recorded on our side: comparing the
-  // request against sc.getCheckpointDir is unsound — Spark returns a
-  // scheme-qualified UUID subdir ("file:/dir/<uuid>") that never equals
-  // the raw request, and a prefix test has no path-separator boundary
-  // ("/ckpt" would claim "/ckpt2/<uuid>"). setCheckpointDir mints a
-  // fresh subdir per call, so re-setting per cut would scatter one
-  // job's rounds across dozens of directories.
-  private val requestedCkptDir =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.SparkContext, String]()
-
   /** Lineage cut with a storage level matched to the table's scale.
     *
     * Node-scale state (labels, ranks — O(|V|) rows) cuts to
@@ -47,21 +32,11 @@ object Graph {
     * adjacency at sequential-scan speed, which is the same I/O
     * discipline a 1000-executor cluster applies by landing iteration
     * inputs in storage rather than pinning them in RAM. */
-  private def cut(df: DataFrame, checkpointDir: Option[String],
-                  edgeScale: Boolean = false): DataFrame =
+  private def cut(df: DataFrame, edgeScale: Boolean = false): DataFrame =
     if (isCheapToRecompute(df)) df
-    else checkpointDir match {
-      case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        if (requestedCkptDir.get(sc) != dir) {
-          sc.setCheckpointDir(dir)
-          requestedCkptDir.put(sc, dir)
-        }
-        df.checkpoint()
-      case None => df.localCheckpoint(true,
-        if (edgeScale) org.apache.spark.storage.StorageLevel.DISK_ONLY
-        else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    }
+    else df.localCheckpoint(true,
+      if (edgeScale) org.apache.spark.storage.StorageLevel.DISK_ONLY
+      else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
 
   /** A cut exists to stop a multiply-consumed subtree from re-running
     * an EXPENSIVE upstream — but when the plan below is nothing but
@@ -118,19 +93,15 @@ object Graph {
     * the per-round join input, so pre-`distinct` heavily duplicated
     * edge sets. Output: (`n`, `component`) for every node appearing in
     * any edge.
-    *
-    * @param checkpointDir reliable checkpoint location for the
-    *        per-round lineage cuts (see [[cut]]); None = executor-local.
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIter: Int = 50,
-                          checkpointDir: Option[String] = None): DataFrame = {
+                          maxIter: Int = 50): DataFrame = {
     ccRuns.incrementAndGet()
     // checkpoint the projected edge list BEFORE symmetrizing: the union
     // references it twice, and an unmaterialized subtree would evaluate
     // the (possibly expensive) upstream pair pipeline once per branch
     val e1 = cut(edges.select(col(srcCol).as("n"), col(dstCol).as("m")),
-      checkpointDir, edgeScale = true)
+      edgeScale = true)
     // symmetric relation; input pairs (a<b) are unique by convention so
     // the two directions never collide
     val sym = e1.union(e1.select(col("m").as("n"), col("n").as("m")))
@@ -142,7 +113,7 @@ object Graph {
     // + probe) earlier; the monotone-sum convergence probe is unchanged
     // (the seed only lowers the starting sum)
     var labels = cut(sym.groupBy(col("n"))
-      .agg(least(min(col("m")), col("n")).as("lbl")), checkpointDir)
+      .agg(least(min(col("m")), col("n")).as("lbl")))
     // self-loops fold "own label" into the neighbour min; partition on
     // the join key once so rounds reuse the exchange. lazy: cut() is
     // EAGER, and with maxIter=0 (forced escalation) the loop never
@@ -150,7 +121,7 @@ object Graph {
     // shuffled and checkpointed for nothing
     lazy val symSelf = cut(sym
       .union(labels.select(col("n"), col("n").as("m")))
-      .repartition(col("m")), checkpointDir, edgeScale = true)
+      .repartition(col("m")), edgeScale = true)
     // exact sum: monotone decreasing, overflow-free at any scale; an
     // EMPTY frame sums to zero so a pairless input converges to the
     // empty result instead of an NPE. Computed as ONE shuffle-free job
@@ -194,8 +165,7 @@ object Graph {
       labels = cut(prop.as("x")
         .join(prop.select(col("n").as("j"), col("lbl").as("jl")),
           col("x.lbl") === col("j"), "left")
-        .select(col("x.n").as("n"), coalesce(col("jl"), col("x.lbl")).as("lbl")),
-        checkpointDir)
+        .select(col("x.n").as("n"), coalesce(col("jl"), col("x.lbl")).as("lbl")))
       val s = labelSum(labels)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
@@ -209,7 +179,7 @@ object Graph {
       val seed = sym.union(
         labels.filter(col("n") =!= col("lbl"))
           .select(col("n"), col("lbl").as("m")))
-      val stars = largeSmallStar(seed, checkpointDir)
+      val stars = largeSmallStar(seed)
       // stars hold (leaf → root) for every non-root node of a size-≥2
       // component; roots (and any self-loop-only singleton, whose edges
       // the star rewrites drop) resolve to themselves via the left join
@@ -262,8 +232,7 @@ object Graph {
     * new edges — landed component ids and never-landed (batch) ids;
     * resolve a landed member through its component id. */
   def contractedComponents(landedCC: DataFrame, newEdges: DataFrame,
-                           srcCol: String, dstCol: String,
-                           checkpointDir: Option[String] = None): DataFrame = {
+                           srcCol: String, dstCol: String): DataFrame = {
     val m = landedCC.select(col("n"), col("component"))
     val contracted = newEdges
       .select(col(srcCol).as("__ea"), col(dstCol).as("__eb"))
@@ -274,8 +243,7 @@ object Graph {
       .select(coalesce(col("__ca"), col("__ea")).as("__a"),
         coalesce(col("__cb"), col("__eb")).as("__b"))
       .filter(col("__a") =!= col("__b"))
-    connectedComponents(contracted, "__a", "__b",
-      checkpointDir = checkpointDir)
+    connectedComponents(contracted, "__a", "__b")
   }
 
   /** [[contractedComponents]] composed back through the landed
@@ -289,10 +257,9 @@ object Graph {
     * relabel join here is O(landed nodes), which is linear and
     * shuffle-light but not O(batch). */
   def incrementalComponents(landedCC: DataFrame, newEdges: DataFrame,
-                            srcCol: String, dstCol: String,
-                            checkpointDir: Option[String] = None): DataFrame =
+                            srcCol: String, dstCol: String): DataFrame =
     relabelThrough(landedCC,
-      contractedComponents(landedCC, newEdges, srcCol, dstCol, checkpointDir))
+      contractedComponents(landedCC, newEdges, srcCol, dstCol))
 
   /** The relabel half of [[incrementalComponents]], factored out so a
     * caller that already HOLDS the contracted labels (the pipeline
@@ -360,10 +327,8 @@ object Graph {
     * Convergence check is EXACT set equality (both sides distinct:
     * equal counts + empty except), not a hashed checksum — one extra
     * scan per round on a shrinking edge set, zero false fixpoints. */
-  private[operators] def largeSmallStar(edges: DataFrame,
-                                        checkpointDir: Option[String] = None): DataFrame = {
-    var e = cut(edges.filter(col("n") =!= col("m")).distinct(), checkpointDir,
-      edgeScale = true)
+  private[operators] def largeSmallStar(edges: DataFrame): DataFrame = {
+    var e = cut(edges.filter(col("n") =!= col("m")).distinct(), edgeScale = true)
     var eCount = e.count()
     if (eCount == 0) return e
     // nodes ≤ 2·edges; the paper's whp bound is O(log² n) rounds with
@@ -376,7 +341,7 @@ object Graph {
     var stable = false
     var rounds = 0L
     while (!stable && rounds < bound) {
-      val next = cut(smallStar(largeStar(e)), checkpointDir, edgeScale = true)
+      val next = cut(smallStar(largeStar(e)), edgeScale = true)
       val nextCount = next.count()
       stable = nextCount == eCount && next.except(e).isEmpty
       e = next
@@ -554,14 +519,13 @@ object Graph {
     * ever loses mass). */
   def pageRankFixedPoint(edges: DataFrame, srcCol: String, dstCol: String,
                          iterations: Int, base: Long = 1000000000000L,
-                         dampingPct: Int = 85,
-                         checkpointDir: Option[String] = None): DataFrame = {
+                         dampingPct: Int = 85): DataFrame = {
     require(iterations >= 0 && dampingPct >= 0 && dampingPct <= 100 && base > 0,
       "iterations >= 0, dampingPct in [0,100], base > 0")
     // cut before symmetrizing: the union consumes the upstream pair
     // pipeline twice otherwise (same reasoning as connectedComponents)
     val e1 = cut(edges.select(col(srcCol).as("n"), col(dstCol).as("m"))
-      .filter(col("n") =!= col("m")).distinct(), checkpointDir,
+      .filter(col("n") =!= col("m")).distinct(),
       edgeScale = true)
     val sym = e1.union(e1.select(col("m").as("n"), col("n").as("m")))
     // the degree CENSUS is cut once (node-sized): every round's
@@ -569,12 +533,10 @@ object Graph {
     // rounds re-aggregates the full edge list for a table that never
     // changes (round 11; exchange reuse cannot save it because each
     // round is its own query execution)
-    val deg = cut(sym.groupBy(col("n")).agg(count(lit(1)).as("deg")),
-      checkpointDir)
+    val deg = cut(sym.groupBy(col("n")).agg(count(lit(1)).as("deg")))
     // edges partitioned once on the rank-join key; every round reuses
     // the exchange instead of reshuffling the (large) edge side
-    val symPart = cut(sym.repartition(col("n")), checkpointDir,
-      edgeScale = true)
+    val symPart = cut(sym.repartition(col("n")), edgeScale = true)
     val nNodes = deg.count() // one scalar to size r0; the only collect
     if (nNodes == 0)
       return deg.select(col("n"), col("deg").cast("long").as("rank_fp")).limit(0)
@@ -588,8 +550,7 @@ object Graph {
       // every node receives ≥ 1 contribution (deg ≥ 1 on the
       // symmetrized graph), so contrib covers the full node set
       ranks = cut(contrib.select(col("m").as("n"),
-        (lit(teleport) + expr(s"($dampingPct * s) div 100")).as("r")),
-        checkpointDir)
+        (lit(teleport) + expr(s"($dampingPct * s) div 100")).as("r")))
     }
     ranks.select(col("n"), col("r").as("rank_fp"))
   }
@@ -612,19 +573,17 @@ object Graph {
     *
     * Output: (`n`, `community` = converged-ish label after `rounds`). */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       rounds: Int,
-                       checkpointDir: Option[String] = None): DataFrame = {
+                       rounds: Int): DataFrame = {
     require(rounds >= 0, "rounds must be >= 0")
     // canonicalize orientation BEFORE distinct (like triangleCounts):
     // an edge log carrying both (a,b) and (b,a) would otherwise
     // survive distinct() twice and double that neighbor's vote
     val e1 = cut(edges.select(least(col(srcCol), col(dstCol)).as("n"),
         greatest(col(srcCol), col(dstCol)).as("m"))
-      .filter(col("n") =!= col("m")).distinct(), checkpointDir,
+      .filter(col("n") =!= col("m")).distinct(),
       edgeScale = true)
     val sym = e1.union(e1.select(col("m").as("n"), col("n").as("m")))
-    val symPart = cut(sym.repartition(col("m")), checkpointDir,
-      edgeScale = true)
+    val symPart = cut(sym.repartition(col("m")), edgeScale = true)
     var labels = sym.select(col("n")).distinct()
       .select(col("n"), col("n").as("lbl"))
     for (_ <- 1 to rounds) {
@@ -635,7 +594,7 @@ object Graph {
       labels = cut(votes
         .groupBy(col("n"))
         .agg(max(struct(col("c"), (-col("lbl")).as("neg"))).as("w"))
-        .select(col("n"), (-col("w.neg")).as("lbl")), checkpointDir)
+        .select(col("n"), (-col("w.neg")).as("lbl")))
     }
     labels.select(col("n"), col("lbl").as("community"))
   }
@@ -649,18 +608,11 @@ object Graph {
     * function of (edges, k, rounds) — which is what lets an external
     * oracle unroll the identical rounds (the q123 LPA pattern). Each
     * round is one degree hash-agg + two semi-joins on the shrinking
-    * edge set; per-round lineage cut via [[cut]].
-    *
-    * An under-provisioned `rounds` (shallower than the peel depth)
-    * yields a SUPERSET of the true k-core with no other signal, so
-    * callers outside an unrolled-oracle gate should pass
-    * `assertConverged = true`: one extra peel round is executed and the
-    * call fails loudly if it still removes edges — two scalar counts,
-    * not a plan change. */
+    * edge set; per-round lineage cut via [[cut]]. An under-provisioned
+    * `rounds` (shallower than the peel depth) yields a SUPERSET of the
+    * true k-core with no other signal. */
   def kCoreFixedRounds(edges: DataFrame, srcCol: String, dstCol: String,
-                       k: Int, rounds: Int,
-                       checkpointDir: Option[String] = None,
-                       assertConverged: Boolean = false): DataFrame = {
+                       k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 0, "k >= 1, rounds >= 0")
     def peel(e0: DataFrame): DataFrame = {
       val deg = e0.select(col("a").as("node"))
@@ -670,21 +622,13 @@ object Graph {
       cut(e0
         .join(keep.select(col("node").as("a")), "a", "left_semi")
         .join(keep.select(col("node").as("b")), "b", "left_semi")
-        .select(col("a"), col("b")), checkpointDir, edgeScale = true)
+        .select(col("a"), col("b")), edgeScale = true)
     }
     var e = cut(edges.select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct(), checkpointDir,
+      .filter(col("a") =!= col("b")).distinct(),
       edgeScale = true)
     for (_ <- 1 to rounds) e = peel(e)
-    if (assertConverged) {
-      val before = e.count()
-      val after = peel(e).count()
-      require(after == before,
-        s"kCoreFixedRounds(k=$k, rounds=$rounds) has NOT converged: one " +
-          s"extra peel round removed ${before - after} more edges — the " +
-          "result is a superset of the true k-core; increase `rounds`")
-    }
     e.select(col("a").as("node")).union(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("core_degree"))
   }
@@ -695,10 +639,8 @@ object Graph {
     * docs + everything untouched by any pair). Anti-join ships only
     * the non-canonical id set. */
   def dedupSurvivors(docs: DataFrame, idCol: String, pairs: DataFrame,
-                     aCol: String, bCol: String,
-                     checkpointDir: Option[String] = None): DataFrame = {
-    val dropIds = connectedComponents(pairs, aCol, bCol,
-        checkpointDir = checkpointDir)
+                     aCol: String, bCol: String): DataFrame = {
+    val dropIds = connectedComponents(pairs, aCol, bCol)
       .filter(col("n") =!= col("component"))
       .select(col("n"))
     docs.join(dropIds, docs(idCol) === dropIds("n"), "left_anti")

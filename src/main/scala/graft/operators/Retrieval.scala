@@ -28,40 +28,16 @@ import graft.functions.TextFns._
   */
 object Retrieval {
 
-  /** A materializable lexical index: `postings` is the full
-    * (doc_id, term, tf, dl) table — ONE corpus scan builds it, and the
-    * corpus stats (N, Σdl) derive from it without rescanning (every
-    * doc has ≥ 1 token, so distinct doc_ids cover the corpus and
-    * Σ tf = Σ dl). Persist `postings` as a staging table and the
-    * corpus text is never re-read across queries — the index/search
-    * split every real retrieval engine makes. */
-  final case class Bm25Index(postings: DataFrame)
-
-  /** Build the index in one corpus pass. */
-  def bm25Index(docs: DataFrame): Bm25Index = {
+  /** The postings table (doc_id, term, tf, dl), built in ONE corpus
+    * pass; per-term statistics ([[tfidfCosinePairs]]' document
+    * frequencies) derive from it without rescanning the corpus text. */
+  def bm25Index(docs: DataFrame): DataFrame = {
     val toks = tokens(col("text"))
-    Bm25Index(docs
+    docs
       .select(col("doc_id"), size(toks).cast("long").as("dl"),
         explode(toks).as("term"))
       .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl")))
-  }
-
-  /** Score a term bag against a prebuilt index — identical results to
-    * [[bm25TopK]] (same integer inputs ⇒ same doubles ⇒ same 6-decimal
-    * per-term rounding), but the corpus scan is replaced by a postings
-    * lookup. */
-  def bm25Search(index: Bm25Index, queryTerms: Seq[String], k: Int,
-                 k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(queryTerms.nonEmpty, "bm25Search needs at least one query term")
-    require(k > 0, "k must be positive")
-    val p = index.postings
-    val tf = p.filter(col("term").isin(queryTerms.map(x => x: Any): _*))
-    val dfq = tf.groupBy(col("term"))
-      .agg(countDistinct(col("doc_id")).as("df"))
-    val stats = p.agg(countDistinct(col("doc_id")).as("n_total"),
-      sum(col("tf")).as("sum_dl"))
-    scoreAndRank(tf, dfq, stats, k, k1, b)
+      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
   }
 
   /** Top-k documents by BM25 score for a bag of query terms.
@@ -94,13 +70,6 @@ object Retrieval {
     // the one double division is bit-portable)
     val stats = docs.agg(count(lit(1)).as("n_total"),
       sum(size(tokens(col("text"))).cast("long")).as("sum_dl"))
-    scoreAndRank(tf, dfq, stats, k, k1, b)
-  }
-
-  /** Shared scoring tail: tf (doc_id, term, tf, dl) × df (term, df) ×
-    * stats (n_total, sum_dl) → ranked top-k. Both tiny sides broadcast. */
-  private def scoreAndRank(tf: DataFrame, dfq: DataFrame, stats: DataFrame,
-                           k: Int, k1: Double, b: Double): DataFrame = {
     val avgdl = col("sum_dl").cast("double") / col("n_total")
     val idf = log(lit(1.0) +
       (col("n_total") - col("df") + 0.5) / (col("df") + 0.5))
@@ -143,7 +112,7 @@ object Retrieval {
   def tfidfCosinePairs(docs: DataFrame, minDf: Long, maxDf: Long,
                        minCosine: Double): DataFrame = {
     require(minDf >= 2, "minDf < 2 is never useful: df=1 terms cannot pair")
-    val postings = bm25Index(docs).postings // (doc_id, term, tf, dl)
+    val postings = bm25Index(docs) // (doc_id, term, tf, dl)
     // postings are unique per (doc_id, term) by construction, so a
     // plain count IS the document frequency — no distinct aggregate
     val dfq = postings.groupBy(col("term"))

@@ -19,66 +19,25 @@ import graft.engine.Sources
 object EventStream {
 
   /** Streaming source over the events fixture (schema pinned; µs ts
-    * read as its raw long, `ts_utc` derived — same convention as
-    * Sources). */
-  def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
+    * read as its raw long, `ts_utc` derived by the batch scan's own
+    * [[graft.engine.Sources.deriveTsUtc]]). */
+  def readEvents(spark: SparkSession, sfDir: String): DataFrame =
     // FileStreamSource needs a directory basePath; a glob that matches the
     // single fixture file keeps the parent dir as the base.
-    spark.readStream
+    Sources.deriveTsUtc(spark.readStream
       .schema(Sources.events)
-      .parquet(s"$sfDir/events.parque[t]")
-      .withColumn("ts_utc", expr("timestamp_micros(ts)"))
-  }
+      .parquet(s"$sfDir/events.parque[t]"))
 
-  /** Hourly tumbling-window counts/averages per event type, with an
-    * event-time watermark (bounds state on an unbounded stream; a closed
-    * window's state is dropped once the watermark passes it). */
-  def hourlyAgg(stream: DataFrame, withWatermark: Boolean): DataFrame = {
-    val src = if (withWatermark) stream.withWatermark("ts_utc", "2 hours") else stream
+  /** Hourly tumbling-window counts/averages per event type. On an
+    * unbounded stream, watermark `ts_utc` first so a closed window's
+    * state is dropped once the watermark passes it. */
+  def hourlyAgg(stream: DataFrame): DataFrame =
     // exactAvg: decimal sums merge order-independently — in streaming
     // that also means per-micro-batch partial merge order cannot move
     // the result (q30 must equal the batch q17 bit for bit)
-    src.groupBy(window(col("ts_utc"), "1 hour"), col("event_type"))
+    stream.groupBy(window(col("ts_utc"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         graft.engine.Aggregates.exactAvg(col("value")).as("avg_value"))
-  }
-
-  /** Welford accumulator carried as per-key stream state. */
-  case class UserState(n: Long, mean: Double, m2: Double)
-
-  /** Emitted per key per micro-batch: running count/mean/σ_pop. */
-  case class UserStats(user_id: Long, n: Long, mean: Double, stddev_pop: Double)
-
-  /** Custom keyed state via `flatMapGroupsWithState`: per-user running
-    * count/mean/variance (Welford, numerically stable), state = one
-    * 3-field case class per key — the arbitrary-state API for stream
-    * logic that windowed aggs can't express. State lives in the state
-    * store (checkpointed, per-key partitioned); at scale bound it with a
-    * timeout instead of NoTimeout. */
-  def runningUserStats(events: DataFrame): Dataset[UserStats] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    // the central "missing ≡ NULL or NaN" invariant applies to streams
-    // too: a NULL would crash the primitive-Double encoder, and one NaN
-    // would poison the Welford state for its key forever
-    events.filter(graft.engine.Cleaning.notMissing(col("value")))
-      .select(col("user_id"), col("value")).as[(Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[UserState, UserStats](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, Double)], state: GroupState[UserState]) =>
-          var s = state.getOption.getOrElse(UserState(0L, 0.0, 0.0))
-          rows.foreach { case (_, v) =>
-            val n1 = s.n + 1
-            val d = v - s.mean
-            val mean1 = s.mean + d / n1
-            s = UserState(n1, mean1, s.m2 + d * (v - mean1))
-          }
-          state.update(s)
-          Iterator(UserStats(user, s.n, s.mean,
-            if (s.n == 0) 0.0 else math.sqrt(s.m2 / s.n)))
-      }
-  }
 
   /** Streaming → table upsert via `foreachBatch`: each micro-batch is
     * merged into the target through [[graft.engine.Sources.upsert]] —
@@ -115,23 +74,6 @@ object EventStream {
                     watermarkDelay: String): DataFrame =
     stream.withWatermark("ts_utc", watermarkDelay)
       .dropDuplicatesWithinWatermark(keys)
-
-  /** Stream-stream inner join with a bounded time condition: each side
-    * watermarked, join on user_id with the right event required within
-    * [left, left + 1 hour). Both state stores are evictable because the
-    * time bound plus watermarks give Spark an upper bound on how long a
-    * row can still find matches — the required shape for unbounded
-    * stream joins. */
-  def streamStreamJoin(left: DataFrame, right: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.expr
-    val l = left.select(col("user_id"), col("event_id").as("l_event"),
-      col("ts_utc").as("l_ts")).withWatermark("l_ts", "2 hours")
-    val r = right.select(col("user_id").as("r_user"), col("event_id").as("r_event"),
-      col("ts_utc").as("r_ts")).withWatermark("r_ts", "2 hours")
-    l.join(r, expr(
-      """user_id = r_user AND l_event <> r_event AND
-         r_ts >= l_ts AND r_ts < l_ts + INTERVAL 1 HOUR"""))
-  }
 
   /** Shared run-to-completion scaffolding for the batch-gate streaming
     * queries: start `stream` into a uniquely-named memory sink with 8
@@ -341,7 +283,7 @@ object EventStream {
     * and return the final result as a batch DataFrame. */
   def runHourlyOnce(spark: SparkSession, sfDir: String): DataFrame =
     runToMemory(spark, "hourly_", "complete",
-        hourlyAgg(readEvents(spark, sfDir), withWatermark = false)) { t =>
+        hourlyAgg(readEvents(spark, sfDir))) { t =>
       t.select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
           col("event_type"), col("n_events"),
           graft.engine.Aggregates.round6Portable(col("avg_value")).as("avg_value"))
@@ -376,9 +318,8 @@ object EventStream {
   /** Exact-decimal per-key moment state (n, Σv, Σv²). Sums are
     * java.math.BigDecimal — integer arithmetic at fixed scale, so the
     * accumulated value is independent of arrival order, micro-batch
-    * split, and partition count; the float-Welford state
-    * ([[UserState]]) is NOT (its last ulp moves with merge order, which
-    * a hash gate would see). */
+    * split, and partition count; a float Welford state is NOT (its
+    * last ulp moves with merge order, which a hash gate would see). */
   case class ExactMomentState(n: Long, sum: java.math.BigDecimal,
                               ssq: java.math.BigDecimal)
 

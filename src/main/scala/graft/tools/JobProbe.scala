@@ -59,7 +59,6 @@ object JobProbe {
       sorted.foreach { case (id, off, dur, desc) =>
         println(f"  job $id%3d  +${off / 1000.0}%6.2fs  ${dur / 1000.0}%6.2fs  ${desc.take(80)}")
       }
-      val gaps = sorted.map(_._2).zip(sorted.map(t => t._2 + t._3).dropRight(1) :+ 0L)
       println(f"  sum(job durations)=${sorted.map(_._3).sum / 1000.0}%.2f s " +
         f"(driver-side/planning gap = total - this)")
     }

@@ -15,12 +15,4 @@ object GraftSqlBridge {
 
   def expression(c: Column): Expression =
     ColumnConversions.expression(c)
-
-  /** Register a SQL function on an existing session (sessionState is
-    * private[sql]; for new sessions prefer graft.GraftExtensions via
-    * `spark.sql.extensions`). */
-  def registerFunction(spark: SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "scala_udf")
 }

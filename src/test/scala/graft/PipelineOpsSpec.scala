@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Sources
@@ -434,14 +433,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(sh.forall(_._1 == 1L))  // doc 2 (<3 tokens) and doc 3 (null) emit nothing
   }
 
-  test("graft_dot is callable from SQL after registration") {
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "graft_dot",
-      exprs => graft.functions.DotProduct(exprs(0), exprs(1)))
-    val r = spark.sql(
-      "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").collect().head
-    assert(math.abs(r.getDouble(0) - 11.0) < 1e-12)
-  }
-
   test("bucketed co-located join plans without a shuffle exchange") {
     val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -782,28 +773,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(spark.table(name).count() > 0)
   }
 
-  test("flatMapGroupsWithState running stats equal the batch aggregation") {
-    val stats = EventStream.runningUserStats(EventStream.readEvents(spark, sfDir))
-    val name = "fmgs_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = stats.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    // single micro-batch → one emitted row per user = final state
-    val streamed = spark.table(name)
-      .collect().map(r => r.getAs[Long]("user_id") ->
-        (r.getAs[Long]("n"), r.getAs[Double]("mean"), r.getAs[Double]("stddev_pop"))).toMap
-    val batch = graft.engine.Aggregates.groupedStats(
-        Sources.table(spark, sfDir, "events"), Seq("user_id"), "value")
-      .collect().map(r => r.getAs[Long]("user_id") ->
-        (r.getAs[Long]("n"), r.getAs[Double]("avg_value"), r.getAs[Double]("stddev_value"))).toMap
-    assert(streamed.keySet === batch.keySet)
-    streamed.foreach { case (u, (n, mean, sd)) =>
-      val (bn, bmean, bsd) = batch(u)
-      assert(n === bn)
-      assert(math.abs(mean - bmean) < 1e-6, s"user $u mean")
-      assert(math.abs(sd - bsd) < 1e-6, s"user $u stddev")
-    }
-  }
-
   test("incremental LSH candidates equal the batch-involving slice of a full run") {
     val d = Sources.table(spark, sfDir, "documents")
     val corpus = d.filter(col("doc_id") < 400)
@@ -919,61 +888,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(viaFallback.length === 500 && viaFallback.forall(_._2 === 0L))
     assert(graft.operators.Graph.escalations.get() > escBefore,
       "this case must actually exercise the escalation path")
-  }
-
-  test("checkpointDir switches lineage cuts to reliable checkpoints") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
-    try {
-      val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b")
-      val got = graft.operators.Graph
-        .connectedComponents(edges, "a", "b", checkpointDir = Some(dir))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got === Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
-      // reliable checkpoints must actually land in the requested dir
-      def anyFile(f: java.io.File): Boolean =
-        f.isFile || Option(f.listFiles).exists(_.exists(anyFile))
-      assert(anyFile(new java.io.File(dir)),
-        "checkpointDir was accepted but nothing was written there")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
-        .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-  }
-
-  test("inferred scans are drop-in compatible with pinned-schema scans") {
-    // parquet footers self-describe, so inference costs nothing and must
-    // surface the same columns (incl. the derived ts_utc on events)...
-    Seq("events", "documents", "orders", "lineitem").foreach { t =>
-      assert(Sources.tableInferred(spark, sfDir, t).columns.toSet ===
-        Sources.table(spark, sfDir, t).columns.toSet, s"table $t")
-    }
-    // ...and the same query answers: a real aggregation over both read
-    // paths must agree exactly
-    def agg(df: org.apache.spark.sql.DataFrame) =
-      df.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), max(col("ts_utc")).as("mx"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.get(2).toString))
-        .sortBy(_._1).toSeq
-    assert(agg(Sources.tableInferred(spark, sfDir, "events")) ===
-      agg(Sources.table(spark, sfDir, "events")))
-  }
-
-  test("sampled JSONL inference discovers the written schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
-    try {
-      Sources.writeJsonl(
-        Seq((1L, "alpha", 1.5), (2L, "beta", 2.5), (3L, "gamma", 3.5))
-          .toDF("id", "name", "score"), dir)
-      val inferred = Sources.inferJsonl(spark, dir, samplingRatio = 0.5)
-      assert(inferred.columns.sorted.toSeq === Seq("id", "name", "score"))
-      assert(inferred.count() === 3L)  // sampling bounds inference, not the scan
-      assert(inferred.agg(sum(col("score"))).head().getDouble(0) === 7.5)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
-        .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
   }
 
   test("connected components and survivors handle an EMPTY pair set") {
@@ -1178,24 +1092,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(readBack() === expect)
   }
 
-  test("partitioned write prunes partitions at planning time") {
-    val dir = java.nio.file.Files.createTempDirectory("part_w").toString + "/events_by_day"
-    val events = Sources.table(spark, sfDir, "events")
-      .withColumn("day", date_format(col("ts_utc"), "yyyy-MM-dd"))
-    Sources.partitionedWrite(events, Seq("day"), dir)
-    val back = spark.read.parquet(dir)
-    // partition values type-infer to DATE on read-back; compare as strings
-    val days = back.select(col("day").cast("string"))
-      .distinct().collect().map(_.getString(0)).sorted
-    assert(days.length > 1, "fixture should span multiple days")
-    val pruned = back.filter(col("day") === days.head)
-    val scan = pruned.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters: [isnotnull(day"),
-      s"expected a partition filter in the scan:\n$scan")
-    assert(pruned.count() ===
-      events.filter(col("day") === days.head).count())
-  }
-
   test("watermarked stream dedup: one row per key when batch has no late dupes") {
     val deduped = EventStream.dedupedStream(
       EventStream.readEvents(spark, sfDir), Seq("user_id", "event_type"), "1 hour")
@@ -1262,28 +1158,6 @@ class PipelineOpsSpec extends AnyFunSuite {
       .orderBy(col("user_id").asc)
       .collect().toSeq
     assert(streamed === batch)
-  }
-
-  test("stream-stream join matches the batch time-bounded join") {
-    val joined = EventStream.streamStreamJoin(
-      EventStream.readEvents(spark, sfDir), EventStream.readEvents(spark, sfDir))
-    val name = "ssj_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = joined.writeStream.outputMode("append").format("memory")
-      .queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    val got = spark.table(name)
-      .select(col("l_event"), col("r_event"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ev = Sources.table(spark, sfDir, "events")
-      .select(col("user_id"), col("event_id"), col("ts_utc"))
-    val l = ev.select(col("user_id"), col("event_id").as("l_event"), col("ts_utc").as("l_ts"))
-    val r = ev.select(col("user_id").as("r_user"), col("event_id").as("r_event"), col("ts_utc").as("r_ts"))
-    val expect = l.join(r, expr(
-        """user_id = r_user AND l_event <> r_event AND
-           r_ts >= l_ts AND r_ts < l_ts + INTERVAL 1 HOUR"""))
-      .select(col("l_event"), col("r_event"))
-      .collect().map(r2 => (r2.getLong(0), r2.getLong(1))).toSet
-    assert(expect.nonEmpty && got === expect)
   }
 
   test("text normalization: NFD and NFC forms of the same text get one dedup key") {
@@ -1448,25 +1322,6 @@ class PipelineOpsSpec extends AnyFunSuite {
       s"suppkey range/file ${per.getDouble(2)}")
   }
 
-  test("jsonl/csv round-trip preserves the documents table under pinned schemas") {
-    val d = Sources.table(spark, sfDir, "documents")
-      .select(col("doc_id"), col("source"), col("lang"), col("n_chars"), col("text"))
-    val schema = d.schema
-    val base = java.nio.file.Files.createTempDirectory("fmt").toString
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("doc_id"), md5(col("text")), col("source"), col("lang"), col("n_chars"))
-        .collect().map(_.toSeq).toSet
-    Sources.writeJsonl(d, s"$base/j")
-    assert(key(Sources.readJsonl(spark, s"$base/j", schema)) === key(d))
-    // csv: newlines in text break the line format unless quoted+escaped;
-    // default writer quotes, reader must allow multiline
-    Sources.writeCsv(d, s"$base/c")
-    val csvBack = spark.read.schema(schema)
-      .option("header", "true").option("multiLine", "true")
-      .option("escape", "\"").csv(s"$base/c")
-    assert(key(csvBack) === key(d))
-  }
-
   test("compact rewrites a many-file table into few files, data intact") {
     val base = java.nio.file.Files.createTempDirectory("compact").toString + "/t"
     val d = Sources.table(spark, sfDir, "orders").select(col("o_orderkey"))
@@ -1488,18 +1343,6 @@ class PipelineOpsSpec extends AnyFunSuite {
          FROM nation JOIN region ON n_regionkey = r_regionkey
          GROUP BY r_name ORDER BY r_name""").collect()
     assert(got.length === 5 && got.map(_.getLong(1)).sum === 25)
-  }
-
-  test("typed Dataset facade round-trips rows and agrees with the columnar path") {
-    val ev = graft.engine.Typed.events(spark, sfDir)
-    // typed lambda path (edges/tests only - opaque to Catalyst)
-    val typedCount = ev.filter(e => e.value.exists(_ > 150) &&
-      e.event_type == "purchase").count()
-    val columnar = Sources.table(spark, sfDir, "events")
-      .filter(col("value") > 150 && col("event_type") === "purchase").count()
-    assert(typedCount === columnar && typedCount > 0)
-    val d = graft.engine.Typed.documents(spark, sfDir).head()
-    assert(d.n_chars === d.text.length.toLong)
   }
 
   test("checkpointed file stream resumes exactly-once: no reprocess, new files only") {
@@ -1526,39 +1369,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     addFile("p2.parquet") // a NEW file is exactly the increment processed
     runOnce()
     assert(spark.read.parquet(out).count() === 2 * n1)
-  }
-
-  test("jsonl corrupt lines land in _corrupt_record instead of failing the scan") {
-    val base = java.nio.file.Files.createTempDirectory("fmtc").toString
-    val p = java.nio.file.Paths.get(base, "x.jsonl")
-    java.nio.file.Files.write(p,
-      java.util.Arrays.asList("""{"doc_id": 1, "text": "ok"}""", """{"doc_id": broken"""))
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    // Spark disallows querying only _corrupt_record on an unmaterialized
-    // raw scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN); cache first
-    val got = Sources.readJsonl(spark, p.toString, schema, keepCorrupt = true).cache()
-    assert(got.count() === 2)
-    assert(got.filter(col("_corrupt_record").isNotNull).count() === 1)
-    assert(got.filter(col("doc_id") === 1 && col("text") === "ok").count() === 1)
-  }
-
-  test("Ann facade: every index strategy serves the unified search contract") {
-    val emb = Sources.table(spark, sfDir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 3)
-    val brute = Ann.bruteForce(emb).search(queries, 3)
-    assert(Seq("q_vec", "n_vec", "cosine", "rank").forall(brute.columns.contains),
-      s"unified schema, got ${brute.columns.mkString(",")}")
-    val bruteRows = brute
-      .collect().map(r => (r.getAs[Long]("q_vec"), r.getAs[Long]("rank"))).toSet
-    assert(bruteRows.size === 9, "3 queries x top-3")
-    // strategy swap: same call shape and schema from the approximate indexes
-    Seq(Ann.lsh(emb, planes = 4), Ann.ivfFromLabels(emb, nProbe = 2)).foreach { idx =>
-      val got = idx.search(queries, 3)
-      assert(Seq("q_vec", "n_vec", "cosine", "rank").forall(got.columns.contains),
-        s"unified schema, got ${got.columns.mkString(",")}")
-      assert(got.count() > 0)
-    }
   }
 
   test("bm25: scores rank multi-term high-tf docs first, n_terms counts matches") {
@@ -1700,26 +1510,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(kept === Map(1L -> 2L, 2L -> 3L))
   }
 
-  test("ORC round-trip preserves schema and values; pushdown reaches the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
-    val src = Sources.table(spark, sfDir, "events")
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    Sources.writeOrc(src, dir)
-    val back = Sources.readOrc(spark, dir, src.schema)
-    assert(back.schema === src.schema)
-    assert(back.count() === src.count())
-    // same aggregate answers through the second columnar format
-    def agg(df: org.apache.spark.sql.DataFrame) =
-      df.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(agg(back) === agg(src))
-    // predicate pushdown reaches the ORC scan like it does parquet
-    val plan = back.filter(col("event_type") === "click")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("event_type"),
-      s"ORC scan should carry pushed filters:\n$plan")
-  }
-
   test("k-core peel: paths dissolve, cycles survive, cliques keep full degree") {
     // 2-core of a path is empty: endpoints peel, exposing new endpoints
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("a", "b")
@@ -1774,21 +1564,9 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(Graph.triangleCounts(path, "s", "d").count() === 0)
   }
 
-  test("bm25 index/search returns results identical to the one-shot scorer") {
-    val d = Sources.table(spark, sfDir, "documents")
-    val terms = Seq("spark", "join", "window", "merge")
-    val oneShot = Retrieval.bm25TopK(d, terms, k = 20).collect()
-    val viaIndex = Retrieval.bm25Search(Retrieval.bm25Index(d), terms, k = 20).collect()
-    assert(oneShot.length === viaIndex.length && oneShot.nonEmpty)
-    oneShot.zip(viaIndex).foreach { case (a, b) =>
-      assert(a.getAs[Long]("doc_id") === b.getAs[Long]("doc_id"))
-      assert(a.getAs[Long]("n_terms") === b.getAs[Long]("n_terms"))
-      assert(a.getAs[Double]("score") === b.getAs[Double]("score"))
-    }
-  }
-
   test("watermarked streaming agg runs (state-bounded variant)") {
-    val agg = EventStream.hourlyAgg(EventStream.readEvents(spark, sfDir), withWatermark = true)
+    val agg = EventStream.hourlyAgg(
+      EventStream.readEvents(spark, sfDir).withWatermark("ts_utc", "2 hours"))
     val name = "wm_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = agg.writeStream.outputMode("append").format("memory").queryName(name).start()
     try q.processAllAvailable() finally q.stop()

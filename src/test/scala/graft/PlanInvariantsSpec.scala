@@ -151,12 +151,11 @@ class PlanInvariantsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
     try {
-      // fact partitioned by a bounded-cardinality key (the layout
-      // Sources.partitionedWrite documents for 100 TB tables)
-      graft.engine.Sources.partitionedWrite(
-        graft.engine.Sources.table(spark, sfDir, "lineitem")
-          .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag")),
-        Seq("l_returnflag"), s"$dir/fact")
+      // fact partitioned by a bounded-cardinality key (Hive-style
+      // `fact/l_returnflag=<v>/` directories)
+      graft.engine.Sources.table(spark, sfDir, "lineitem")
+        .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
+        .write.partitionBy("l_returnflag").parquet(s"$dir/fact")
       val fact = spark.read.parquet(s"$dir/fact")
       // the dim must be a real source (a literal LocalRelation folds its
       // filter away at optimization, and DPP keys on a surviving
