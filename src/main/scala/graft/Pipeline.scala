@@ -183,17 +183,6 @@ object Pipeline {
       .union(imageEdgesFrom(imageFpsOf(spark, docs)))
       .union(audioEdgesFrom(audioFpsOf(spark, docs)))
 
-  /** @param multimodal stage 3 clusters over the UNION of the text,
-    *        image and audio dedup arms ([[multimodalPairs]]) instead
-    *        of text simhash alone — the knob for corpora whose
-    *        documents carry image/audio payloads (here derived from
-    *        doc_id, the deterministic-fake container story).
-    * @param embeddings (vec_id keyed in the doc_id space, embedding)
-    *        table for embedding-bearing corpora: enables stage 3.5 —
-    *        prototype pruning + semantic dedup over the vectors (the
-    *        q214 composition), dropping docs whose vector is pruned
-    *        as prototypical or deduped as a semantic twin; docs
-    *        without a vector pass through untouched. */
   /** The staged artifacts a curate() run lands that the NEXT
     * increment consumes (the whole-corpus tables an incremental run
     * must never recompute). Since round 13 these are DURABLE handles:
@@ -243,6 +232,17 @@ object Pipeline {
                                    embVecs: Option[DataFrame] = None,
                                    vecClusters: Option[DataFrame] = None)
 
+  /** @param multimodal stage 3 clusters over the UNION of the text,
+    *        image and audio dedup arms ([[multimodalPairs]]) instead
+    *        of text simhash alone — the knob for corpora whose
+    *        documents carry image/audio payloads (here derived from
+    *        doc_id, the deterministic-fake container story).
+    * @param embeddings (vec_id keyed in the doc_id space, embedding)
+    *        table for embedding-bearing corpora: enables stage 3.5 —
+    *        prototype pruning + semantic dedup over the vectors (the
+    *        q214 composition), dropping docs whose vector is pruned
+    *        as prototypical or deduped as a semantic twin; docs
+    *        without a vector pass through untouched. */
   def curate(spark: SparkSession, docs: DataFrame,
              mixRates: Map[String, Double], mixSalt: String,
              outDir: Option[String],

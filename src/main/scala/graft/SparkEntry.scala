@@ -3778,8 +3778,8 @@ object SparkEntry {
     * runs complete-mode with per-doc agg state (grows with docs — fine
     * over the bounded fixture); the PRODUCTION form for an unbounded
     * corpus is [[graft.streaming.EventStream.dsirScoreUpsert]]
-    * (foreachBatch latest-wins upsert, ZERO streaming state — spec'd
-    * row-identical to the batch scorer and state-operator-free). */
+    * (one batch score + latest-wins upsert, no state — spec'd
+    * row-identical to the batch scorer). */
   private def q190(s: SparkSession, dir: String): DataFrame =
     graft.streaming.EventStream.runDsirScoreOnce(s, dir,
       col("source") === DsirTargetSource, DsirBuckets, DsirSalt)

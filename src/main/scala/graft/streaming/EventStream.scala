@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
@@ -39,29 +39,22 @@ object EventStream {
       .agg(count(lit(1)).as("n_events"),
         graft.engine.Aggregates.exactAvg(col("value")).as("avg_value"))
 
-  /** Streaming → table upsert via `foreachBatch`: each micro-batch is
-    * merged into the target through [[graft.engine.Sources.upsert]] —
-    * one latest-wins pass over table ∪ batch, swapped in crash-safely;
-    * MERGE semantics built from batch operators (the reference's
+  /** Land a bounded file stream as ONE batch [[graft.engine.Sources.upsert]]
+    * into the table at `targetPath` — one latest-wins pass over
+    * table ∪ input, swapped in crash-safely (the reference's re-runnable
     * bulk-upsert ingest, reference: src/ingest/ingest_laps.py:57-68).
-    * Re-processing a batch after a failure converges to the same table:
-    * latest-wins by `versionCol` is idempotent.
-    *
-    * At scale the overwrite becomes a partition-scoped or MERGE-capable
-    * table-format write (the micro-batch only touches its own keys);
-    * the latest-wins pass over table ∪ batch is unchanged. Runs the
-    * stream to completion over the available input (Trigger.AvailableNow). */
+    * No streaming query starts: the files the stream lists now (those an
+    * AvailableNow query without a checkpoint lands as one micro-batch) are
+    * read as a batch ([[org.apache.spark.sql.GraftSqlBridge.boundedFileBatch]]);
+    * if it lists none, the table is left as it is. Re-running
+    * converges: latest-wins by `versionCol` is idempotent. A non-file
+    * source or a stateful or watermark node (aggregate, dedup, watermark,
+    * `*GroupsWithState`, stream–stream join) fails with an
+    * IllegalArgumentException naming it, before the table is touched. */
   def upsertStreamToTable(stream: DataFrame, keys: Seq[String],
-                          versionCol: String, targetPath: String): Unit = {
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        Sources.upsert(batch.toDF(), keys, versionCol, targetPath)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
+                          versionCol: String, targetPath: String): Unit =
+    GraftSqlBridge.boundedFileBatch(stream)
+      .foreach(Sources.upsert(_, keys, versionCol, targetPath))
 
   /** Streaming exact dedup with bounded state: drops re-deliveries of
     * the same key arriving within the watermark delay, the streaming
@@ -158,16 +151,6 @@ object EventStream {
     }
   }
 
-  /** Score a document STREAM with a batch-trained DSIR model — the
-    * train-then-apply shape on streams: the ≤|buckets|-row score table
-    * is built once from the static corpus
-    * ([[graft.operators.DataMix.dsirBucketScores]]) and joined into
-    * the stream per micro-batch (stream-static broadcast join,
-    * stateless), so the stream carries ONE aggregation (per-doc count
-    * + exact decimal score sum — Σ_tokens s(bucket) ≡ Σ_buckets c·s,
-    * order-free). Scoring a doc through the stream is therefore
-    * bit-identical to scoring it in batch (q184), and both hash
-    * against the same SQL oracle. */
   /** The DSIR scoring pipeline shared by the gate stream
     * ([[runDsirScoreOnce]]) and the production upsert
     * ([[dsirScoreUpsert]]): explode → hashed bucket → broadcast model
@@ -185,6 +168,16 @@ object EventStream {
       .agg(count(lit(1)).as("n_tokens"),
         sum(col("s")).cast("double").as("dsir_logratio"))
 
+  /** Score a document STREAM with a batch-trained DSIR model — the
+    * train-then-apply shape on streams: the ≤|buckets|-row score table
+    * is built once from the static corpus
+    * ([[graft.operators.DataMix.dsirBucketScores]]) and joined into
+    * the stream per micro-batch (stream-static broadcast join,
+    * stateless), so the stream carries ONE aggregation (per-doc count
+    * + exact decimal score sum — Σ_tokens s(bucket) ≡ Σ_buckets c·s,
+    * order-free). Scoring a doc through the stream is therefore
+    * bit-identical to scoring it in batch (q184), and both hash
+    * against the same SQL oracle. */
   def runDsirScoreOnce(spark: SparkSession, sfDir: String,
                        isTarget: org.apache.spark.sql.Column,
                        buckets: Int, salt: String): DataFrame = {
@@ -200,25 +193,16 @@ object EventStream {
     }
   }
 
-  /** PRODUCTION form of stream-scored DSIR. [[runDsirScoreOnce]] is the
-    * GATE form: complete-mode with a per-doc streaming aggregation,
-    * whose state (and memory-sink size) grows with every doc ever
-    * streamed — fine over a bounded fixture, wrong for an unbounded
-    * corpus. This form bounds state at ZERO: a document is one source
-    * ROW, so its explode → bucket-join → per-doc sum never crosses a
-    * micro-batch boundary, and each micro-batch scores its own docs
-    * with ordinary BATCH aggregation inside `foreachBatch`, then
-    * upserts (doc_id → score) into the target table through the same
-    * latest-wins checked-swap merge as [[upsertStreamToTable]]. No
-    * streaming state operator exists in the plan (the spec asserts
-    * `lastProgress.stateOperators` is empty), re-processing a batch
-    * after a failure converges to the same table (scores are a pure
-    * function of the doc and the broadcast model), and the resulting
-    * table is row-identical to the batch scorer
-    * ([[graft.operators.DataMix.dsirImportance]]) — both pinned by
-    * spec. The ≤|buckets|-row model is trained batch-side once and
-    * closed over by every micro-batch, exactly the train-then-apply
-    * deployment shape.
+  /** PRODUCTION form of DSIR scoring, with no state: [[runDsirScoreOnce]]
+    * (the GATE form) keeps per-doc streaming state that grows with every
+    * doc streamed. This form scores the documents available now as ONE
+    * batch — a document is one source row, so no score depends on
+    * another doc — and upserts (doc_id → score) latest-wins through
+    * [[graft.engine.Sources.upsert]], like [[upsertStreamToTable]].
+    * Re-running converges to the same table (scores are a pure function
+    * of the doc and the model), which is row-identical to the batch
+    * scorer ([[graft.operators.DataMix.dsirImportance]]) — both pinned
+    * by spec.
     *
     * `modelVersion` is the caller's MONOTONE model version (training
     * epoch / timestamp), stored on every row and used as the
@@ -227,15 +211,12 @@ object EventStream {
     * data-derived column can express that — a doc's n_tokens is
     * identical under both models, so versioning on it would leave the
     * merged table a nondeterministic mix of old and new scores.
-    * Monotonicity is ENFORCED, not assumed: before the stream starts,
-    * the existing target's max(model_version) is read (a one-row agg
-    * over one column — no payload collect) and the new version must be
-    * ≥ it; a lower version would merge into a nondeterministic per-doc
-    * mix, because latestByKey breaks EQUAL versions by arbitrary
-    * row_number order. Re-running at an EQUAL version is therefore
-    * idempotent only when the scores are identical (same model/target/
-    * salt — the documented replay case); a retrain must bump the
-    * version. */
+    * Monotonicity is ENFORCED: before any corpus input is read, the
+    * new version must be ≥ the target's max(model_version) (a one-row
+    * agg); a lower one would merge into a nondeterministic per-doc mix,
+    * because latestByKey breaks EQUAL versions by arbitrary order. So an
+    * EQUAL-version re-run is idempotent only when the scores are
+    * identical (the replay case); a retrain must bump the version. */
   def dsirScoreUpsert(spark: SparkSession, sfDir: String,
                       isTarget: org.apache.spark.sql.Column,
                       buckets: Int, salt: String,
@@ -254,29 +235,12 @@ object EventStream {
       }
     }
     val model = graft.operators.DataMix.dsirBucketScores(
-      graft.engine.Sources.table(spark, sfDir, "documents"),
-      isTarget, buckets, salt).localCheckpoint(true) // model-sized; pin
-    val stream = spark.readStream.schema(Sources.documents)
-      .parquet(s"$sfDir/documents.parque[t]")
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        Sources.upsert(
-          dsirScore(batch.toDF(), model, buckets, salt)
-            .withColumn("model_version", lit(modelVersion)),
-          Seq("doc_id"), "model_version", targetPath)
-      }
-      .start()
-    try {
-      q.processAllAvailable()
-      // the plan must carry NO streaming state operator — the whole
-      // point of the foreachBatch form; a refactor that reintroduces a
-      // stream-side aggregation would show up here before it ships
-      val prog = q.lastProgress
-      require(prog == null || prog.stateOperators.isEmpty,
-        s"dsirScoreUpsert grew streaming state: ${prog.stateOperators.length} operator(s)")
-    } finally q.stop()
+      Sources.table(spark, sfDir, "documents"), isTarget, buckets, salt)
+    Sources.upsert(
+      dsirScore(Sources.tablePlain(spark, sfDir, "documents"), model,
+          buckets, salt)
+        .withColumn("model_version", lit(modelVersion)),
+      Seq("doc_id"), "model_version", targetPath)
   }
 
   /** Run the streaming aggregation to completion over the fixture batch

@@ -1074,7 +1074,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(got === Set(("a", 1L, 1L), ("a", 2L, 2L), ("b", 3L, 1L)))
   }
 
-  test("foreachBatch streaming upsert sink: converges to batch latest-by-key, idempotent") {
+  test("bounded stream upsert: converges to batch latest-by-key, idempotent") {
     val target = java.nio.file.Files.createTempDirectory("upsert_t").toString + "/t"
     val keys = Seq("user_id", "event_type")
     def runOnce(): Unit = EventStream.upsertStreamToTable(

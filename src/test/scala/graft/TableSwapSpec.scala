@@ -6,6 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Sources
@@ -16,7 +18,9 @@ import graft.streaming.EventStream
   * target moved aside to `<path>.old` and no `<path>`, with and without
   * a `<path>.staging` beside it. The states are built by
   * hand; the next upsert or compaction must start from the `.old`
-  * table, never from an empty one. */
+  * table, never from an empty one. The stream upsert itself lands as
+  * one batch (no streaming query) and refuses, before the swap starts,
+  * a stream that is not a bounded file stream. */
 class TableSwapSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -112,6 +116,65 @@ class TableSwapSpec extends AnyFunSuite {
       assert(ex.getMessage.contains("monotone"), ex.getMessage)
       assert(spark.read.parquet(target).count() === 3)
       assert(leftovers(target).isEmpty)
+    } finally rm(tmp)
+  }
+
+  /** Every file under `dir` with its bytes, by relative path. */
+  private def snapshot(dir: Path): Map[String, Seq[Byte]] =
+    Files.walk(dir).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(f => dir.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+
+  test("upsertStreamToTable starts no streaming query") {
+    val tmp = Files.createTempDirectory("graft_swap_noquery")
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.incrementAndGet()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      val target = tmp.resolve("t").toString
+      val batchDir = tmp.resolve("batch").toString
+      events(0, 1000).write.parquet(batchDir)
+      EventStream.upsertStreamToTable(
+        spark.readStream.schema(Sources.events).parquet(batchDir),
+        Seq("event_id"), "ts", target)
+      assert(rows(spark.read.parquet(target)) == rows(events(0, 1000)))
+      // a stream that lists no file lands nothing: no table is created
+      val empty = Files.createDirectory(tmp.resolve("empty")).toString
+      EventStream.upsertStreamToTable(
+        spark.readStream.schema(Sources.events).parquet(empty),
+        Seq("event_id"), "ts", tmp.resolve("t2").toString)
+      assert(!Files.exists(tmp.resolve("t2")))
+      assert(started.get() === 0, "a bounded upsert must not start a streaming query")
+    } finally {
+      spark.streams.removeListener(listener)
+      rm(tmp)
+    }
+  }
+
+  test("upsertStreamToTable rejects a non-file or stateful stream, leaving the table as it was") {
+    val tmp = Files.createTempDirectory("graft_swap_reject")
+    try {
+      val target = tmp.resolve("t")
+      events(0, 1000).write.parquet(target.toString)
+      events(0, 500).write.parquet(tmp.resolve("events.parquet").toString)
+      val before = snapshot(target)
+      val rate = spark.readStream.format("rate").load()
+        .select(col("value").as("event_id"), col("value").as("ts"))
+      val stateful = EventStream.readEvents(spark, tmp.toString)
+        .groupBy("user_id").count()
+      for ((node, stream, keys, version) <- Seq(
+          ("StreamingRelationV2", rate, Seq("event_id"), "ts"),
+          ("Aggregate", stateful, Seq("user_id"), "count"))) {
+        val ex = intercept[IllegalArgumentException] {
+          EventStream.upsertStreamToTable(stream, keys, version, target.toString)
+        }
+        assert(ex.getMessage.contains(node), ex.getMessage)
+        assert(snapshot(target) == before, s"$node: the table must be unchanged")
+        assert(leftovers(target.toString).isEmpty)
+      }
     } finally rm(tmp)
   }
 }
